@@ -486,11 +486,6 @@ def q_incremental_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         store,
         cents,
         threshold=0.25,
-        # fresh = batch_survivors ⋉̸ hits references batch_survivors
-        # twice in one action (directly and through the cross-store hit
-        # set); without the checkpoint the in-batch GEMM dedup kernel
-        # executes once per reference (guide §2.4).
-        checkpoint_batch=True,
     )
     return (
         ivf_assign_literal(fresh, cents)
@@ -535,14 +530,14 @@ def q_incremental_semdedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame
     for parity in (0, 1):
         batch = emb.where(F.pmod(F.col("vec_id"), F.lit(2)) == parity)
         fresh, store = incremental_semantic_dedup_scaled(
-            batch, store, cells, threshold=0.25, checkpoint_batch=True
+            batch, store, cells, threshold=0.25
         )
         fresh_parts.append(fresh.select("vec_id"))
-        # No store re-checkpoint here: with checkpoint_batch=True the
-        # operator already materialized surv_sigs, so wave 1's store
-        # (== surv_sigs) is checkpoint-backed and an extra eager copy
-        # is a redundant corpus-scale job; wave 2's updated store is
-        # never consumed (the row returns fresh ids only).
+        # No store re-checkpoint here: the operator already
+        # materialized surv_sigs, so wave 1's store (== surv_sigs) is
+        # checkpoint-backed and an extra eager copy is a redundant
+        # corpus-scale job; wave 2's updated store is never consumed
+        # (the row returns fresh ids only).
     return fresh_parts[0].unionByName(fresh_parts[1]).orderBy("vec_id")
 
 
@@ -769,7 +764,7 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "raw ADC holds recall@10 but not recall@1 (quantization cannot "
         "separate near-clone families); the exact re-rank recovers "
         "recall@1 >= 0.9 for queries x shortlist extra folds "
-        "(scripts/sf1_ann_recall.py, SCALING.md r10)."
+        "(SCALING.md r10)."
     ),
 )
 def q_ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -237,7 +237,6 @@ def edit_distance_join(
     id_col: str = "doc_id",
     max_edits: int = 1,
     max_bucket_size: int | None = None,
-    cache_variants: bool = True,
 ) -> DataFrame:
     """Fuzzy self-join: every pair of rows whose ``col`` values are
     within Levenshtein distance ``max_edits`` — ``(id1, id2, s1, s2,
@@ -258,17 +257,7 @@ def edit_distance_join(
     larger than the cap are skipped, which can drop pairs among those
     hot keys — leave ``None`` (default) for the exact join.  Substring
     HOF work is O(len^k) per row: this operator targets short keys;
-    for document-scale near-dup use the minhash/simhash family.
-
-    ``cache_variants=True`` (default) lazily local-checkpoints the
-    exploded variant table before the self-join: the table is
-    referenced from 2 subtrees (4 with ``max_bucket_size``) and
-    Catalyst replays un-exchanged subtrees per reference, so without
-    it the O(len^k) neighborhood expansion AND the caller's whole
-    upstream (typically a corpus tokenize+distinct) execute once per
-    side (the hamming/semdedup ``cache_codes`` finding).  State is
-    key-scale ``(id, s, variant)`` rows — names/tokens, never document
-    payloads — and ContextCleaner drops it with the plan."""
+    for document-scale near-dup use the minhash/simhash family."""
     if max_edits < 1:
         raise ValueError(f"max_edits must be >= 1, got {max_edits}")
     s = F.col(col)
@@ -280,10 +269,14 @@ def edit_distance_join(
             F.explode(_deletion_variants(s, max_edits)).alias("__v"),
         )
     )
-    if cache_variants:
-        # Lazy: materializes at the first action, nothing pinned for
-        # the session (the cache_codes idiom).
-        variants = variants.localCheckpoint(eager=False)
+    # The variant table is referenced from 2 subtrees (4 with
+    # max_bucket_size) and Catalyst replays un-exchanged subtrees per
+    # reference, so without a checkpoint the O(len^k) neighborhood
+    # expansion AND the caller's whole upstream execute once per side.
+    # Lazy: materializes at the first action, nothing pinned for the
+    # session; state is key-scale (id, s, variant) rows and
+    # ContextCleaner drops it with the plan.
+    variants = variants.localCheckpoint(eager=False)
     if max_bucket_size is not None:
         counts = variants.groupBy("__v").agg(
             F.count(F.lit(1)).alias("__bn")

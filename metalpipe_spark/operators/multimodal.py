@@ -827,7 +827,6 @@ def audio_energy_segments(
     frame: int = 256,
     hop: int | None = None,
     threshold: float = 0.01,
-    impl: str = "hof",
 ) -> DataFrame:
     """Energy-based activity segmentation — the VAD primitive of audio
     curation (speech/silence splitting before transcription or
@@ -835,14 +834,6 @@ def audio_energy_segments(
     mean-square energy; consecutive frames at or above ``threshold``
     merge into segments ``(id, start_frame, end_frame,
     n_active_frames, start_sample)``.
-
-    ``impl="hof"`` (default) is the ORACLE face: pure JVM expressions,
-    replayable in SQL; Spark interprets (doesn't codegen) higher-order
-    lambdas, so its per-sample cost is real on long clips.
-    ``impl="arrow"`` computes identical segments in a vectorized numpy
-    batch (the ``audio_fingerprint`` kernel discipline) — the
-    throughput path for hour-scale PCM; integer-valued samples agree
-    bit-exactly, float corpora to numpy-sum ulps.
 
     Pure JVM higher-order functions, zero Python and zero shuffle:
     energies come from one ``transform``+``aggregate`` pass over the
@@ -858,12 +849,6 @@ def audio_energy_segments(
         hop = frame
     if hop < 1:
         raise ValueError(f"hop must be >= 1, got {hop}")
-    if impl not in ("hof", "arrow"):
-        raise ValueError(f"impl must be 'hof' or 'arrow', got {impl!r}")
-    if impl == "arrow":
-        return _energy_segments_arrow(
-            df, waveform_col, id_col, frame, hop, threshold
-        )
     w = F.col(waveform_col)
     n_frames = (F.size(w) - F.lit(frame)) / F.lit(hop) + 1
     n_frames = F.floor(n_frames).cast("int")
@@ -912,62 +897,4 @@ def audio_energy_segments(
             (F.col("seg.t") - F.col("seg.s") + 1).alias("n_active_frames"),
             (F.col("seg.s") * hop).cast("long").alias("start_sample"),
         )
-    )
-
-
-def _energy_segments_arrow(
-    df: DataFrame,
-    waveform_col: str,
-    id_col: str,
-    frame: int,
-    hop: int,
-    threshold: float,
-) -> DataFrame:
-    """The vectorized twin of :func:`audio_energy_segments`: per-clip
-    frame energies as one strided numpy reduction, islands via flag
-    diffs — Arrow-batched, embarrassingly parallel, waveforms never
-    shuffle."""
-    import numpy as np
-
-    id_type = df.schema[id_col].dataType.simpleString()
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, ss, es, ns, samp = [], [], [], [], []
-            for rid, wave in zip(pdf[id_col], pdf[waveform_col]):
-                w = np.asarray(wave, dtype=np.float64)
-                n_frames = (len(w) - frame) // hop + 1 if len(w) >= frame else 0
-                if n_frames <= 0:
-                    continue
-                # O(n) cumsum-of-squares difference — a gather matrix
-                # (n_frames x frame indices) would cost frame/hop times
-                # the clip in memory, an OOM on exactly the hour-scale
-                # PCM this path exists for.  Integer-valued samples
-                # stay exact (integer partial sums); float corpora
-                # agree to summation-order ulps, same as any vectorized
-                # reduction.
-                cs = np.concatenate(([0.0], np.cumsum(np.square(w))))
-                starts_at = np.arange(n_frames) * hop
-                e = (cs[starts_at + frame] - cs[starts_at]) / frame
-                active = e >= threshold
-                d = np.diff(np.concatenate(([0], active.view(np.int8), [0])))
-                starts = np.flatnonzero(d == 1)
-                ends = np.flatnonzero(d == -1) - 1
-                for s, t in zip(starts, ends):
-                    ids.append(rid)
-                    ss.append(int(s))
-                    es.append(int(t))
-                    ns.append(int(t - s + 1))
-                    samp.append(int(s) * hop)
-            yield pd.DataFrame(
-                {
-                    "id": ids, "start_frame": ss, "end_frame": es,
-                    "n_active_frames": ns, "start_sample": samp,
-                }
-            )
-
-    return df.select(F.col(id_col), F.col(waveform_col)).mapInPandas(
-        batches,
-        f"id {id_type}, start_frame int, end_frame int, "
-        f"n_active_frames int, start_sample long",
     )

@@ -342,8 +342,7 @@ def adc_rerank(
     0.92 but recall@1 ≈ 0.3 — quantization cannot separate a clone
     family's members, but it reliably puts the true neighbor IN the
     shortlist; the exact re-rank recovers recall@1 ≥ 0.9 for the cost
-    of ``queries × shortlist`` distance folds (scripts/sf1_ann_recall.py,
-    SCALING.md r10).
+    of ``queries × shortlist`` distance folds (SCALING.md r10).
 
     Plan shape at 100 TB: the shortlist is queries × R rows — tiny by
     construction — so it BROADCASTS into the corpus scan (the raw-vector

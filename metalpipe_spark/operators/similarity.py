@@ -623,21 +623,6 @@ def _ivf_cogroup_topk(
     )
 
 
-def hyperplane_lsh_buckets(
-    df: DataFrame,
-    hyperplanes: list[list[float]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Random-hyperplane LSH: bucket = sign pattern of dot products with
-    fixed hyperplanes.  Vectors sharing a bucket are ANN candidates."""
-    bits = [
-        F.when(F.expr(plane_dot_sql(vec_col, h)) >= 0, "1").otherwise("0")
-        for h in hyperplanes
-    ]
-    return df.select(F.col(id_col), F.concat(*bits).alias("bucket"))
-
-
 def deterministic_hyperplanes(num: int, dim: int) -> list[list[float]]:
     """±1 hyperplanes from a fixed LCG — reproducible in any engine (the
     literal matrix ships into both the Spark plan and the oracle SQL)."""
@@ -1074,7 +1059,6 @@ def incremental_semantic_dedup(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     use_gemm: bool = True,
-    checkpoint_batch: bool = False,
     return_delta: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Semantic dedup of a NEW batch against the accumulated corpus —
@@ -1112,14 +1096,14 @@ def incremental_semantic_dedup(
         batch_survivors = semantic_dedup(
             new_docs, centroids, threshold=threshold, vec_col=vec_col, id_col=id_col
         )
-    if checkpoint_batch:
-        # Materialize the BATCH-scale GEMM results once so a caller
-        # running several actions over (fresh, updated) — e.g. the
-        # streaming sink's kept-append + store-rewrite — doesn't re-run
-        # the dedup kernels per action.  Only batch-sized relations are
-        # checkpointed; the accumulated store never enters block
-        # storage.
-        batch_survivors = batch_survivors.localCheckpoint(eager=True)
+    # Materialize the BATCH-scale GEMM results once so a caller running
+    # several actions over (fresh, updated) — e.g. the streaming sink's
+    # kept-append + store-rewrite — doesn't re-run the dedup kernels per
+    # action, and ``fresh`` (which references the survivors twice, once
+    # through the cross-store hit set) doesn't run them per reference.
+    # Only batch-sized relations are checkpointed; the accumulated store
+    # never enters block storage.
+    batch_survivors = batch_survivors.localCheckpoint(eager=True)
     surv_store = cell_store(batch_survivors, centroids, vec_col, id_col)
     if store is not None:
         if use_gemm:
@@ -1138,8 +1122,7 @@ def incremental_semantic_dedup(
                 .select(F.col(f"a.{id_col}").alias(id_col))
                 .distinct()
             )
-        if checkpoint_batch:
-            hits = hits.localCheckpoint(eager=True)  # ids only — tiny
+        hits = hits.localCheckpoint(eager=True)  # ids only — tiny
         fresh = batch_survivors.join(hits, id_col, "left_anti")
         surv_store = surv_store.join(hits, id_col, "left_anti")
         # return_delta: the store is strictly append-only (survivors
@@ -1623,7 +1606,6 @@ def incremental_semantic_dedup_scaled(
     id_col: str = "vec_id",
     chunk: int = 1024,
     max_cell_size: int = 65_536,
-    checkpoint_batch: bool = False,
     check_geometry: bool = True,
     return_delta: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
@@ -1671,60 +1653,58 @@ def incremental_semantic_dedup_scaled(
                 f"{batch_gen!r} — cells would never align; refit the "
                 "store or use its original table"
             )
-    sigs = _assign_with_matrix(new_docs, mat, batch_gen, vec_col, id_col)
-    if checkpoint_batch:
-        sigs = sigs.localCheckpoint(eager=True)
+    sigs = _assign_with_matrix(
+        new_docs, mat, batch_gen, vec_col, id_col
+    ).localCheckpoint(eager=True)
     id_type = new_docs.schema[id_col].dataType.simpleString()
     losers = _gemm_cell_losers(
         sigs.select(id_col, "cell", "vec", "nrm"),
         id_col, id_type, threshold, chunk, max_cell_size,
     )
-    if checkpoint_batch:
-        # Materialize the loser ID SET itself (id-scale), not just its
-        # two consumers: batch_survivors and surv_sigs each anti-join
-        # against ``losers``, so eagerly checkpointing only those two
-        # frames executed the in-batch GEMM kernel — and its
-        # corpus-scale vector shuffle into applyInPandas — once per
-        # consumer (guide §2.4 duplicated-subtree rule).
-        losers = losers.localCheckpoint(eager=True)
+    # Materialize the loser ID SET itself (id-scale), not just its two
+    # consumers: batch_survivors and surv_sigs each anti-join against
+    # ``losers``, so eagerly checkpointing only those two frames
+    # executed the in-batch GEMM kernel — and its corpus-scale vector
+    # shuffle into applyInPandas — once per consumer (guide §2.4
+    # duplicated-subtree rule).
+    losers = losers.localCheckpoint(eager=True)
     batch_survivors = new_docs.join(losers, id_col, "left_anti")
     surv_sigs = sigs.join(losers, id_col, "left_anti")
-    if checkpoint_batch:
-        # The two survivor frames are INDEPENDENT anti-joins of
-        # already-checkpointed inputs; materialize them concurrently —
-        # each job under-fills the cluster at batch scale, so running
-        # them back-to-back serializes idle cores (thread-pool job
-        # overlap; Spark schedules jobs from separate threads fine).
-        # inheritable_thread_target so the checkpoint jobs carry the
-        # caller's Spark local properties (job group/tags, scheduler
-        # pool): a plain thread under pinned-thread mode detaches them,
-        # so cancelling the caller's job group — e.g. stopping the
-        # streaming query whose foreachBatch is running this — would
-        # not reach an in-flight checkpoint job (ADVICE r17).
-        from concurrent.futures import ThreadPoolExecutor
+    # The two survivor frames are INDEPENDENT anti-joins of
+    # already-checkpointed inputs; materialize them concurrently — each
+    # job under-fills the cluster at batch scale, so running them
+    # back-to-back serializes idle cores (thread-pool job overlap; Spark
+    # schedules jobs from separate threads fine).
+    # inheritable_thread_target so the checkpoint jobs carry the
+    # caller's Spark local properties (job group/tags, scheduler pool):
+    # a plain thread under pinned-thread mode detaches them, so
+    # cancelling the caller's job group — e.g. stopping the streaming
+    # query whose foreachBatch is running this — would not reach an
+    # in-flight checkpoint job (ADVICE r17).
+    from concurrent.futures import ThreadPoolExecutor
 
-        from pyspark import inheritable_thread_target
+    from pyspark import inheritable_thread_target
 
-        spark = new_docs.sparkSession
+    spark = new_docs.sparkSession
 
-        def _inherit(fn):
-            try:
-                return inheritable_thread_target(spark)(fn)
-            except TypeError:
-                # Pinned-thread mode off: the session form degrades to
-                # returning the session itself; properties are shared
-                # JVM-side there anyway, so run the target as-is.
-                return fn
+    def _inherit(fn):
+        try:
+            return inheritable_thread_target(spark)(fn)
+        except TypeError:
+            # Pinned-thread mode off: the session form degrades to
+            # returning the session itself; properties are shared
+            # JVM-side there anyway, so run the target as-is.
+            return fn
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_bs = pool.submit(
-                _inherit(lambda: batch_survivors.localCheckpoint(eager=True))
-            )
-            f_ss = pool.submit(
-                _inherit(lambda: surv_sigs.localCheckpoint(eager=True))
-            )
-            batch_survivors = f_bs.result()
-            surv_sigs = f_ss.result()
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f_bs = pool.submit(
+            _inherit(lambda: batch_survivors.localCheckpoint(eager=True))
+        )
+        f_ss = pool.submit(
+            _inherit(lambda: surv_sigs.localCheckpoint(eager=True))
+        )
+        batch_survivors = f_bs.result()
+        surv_sigs = f_ss.result()
     if store is not None:
         # Only store cells the BATCH touches enter the cross GEMM: a
         # batch of B rows names <= B distinct cells, so the semi-join
@@ -1743,9 +1723,7 @@ def incremental_semantic_dedup_scaled(
             store_touched,
             threshold,
             id_col,
-        )
-        if checkpoint_batch:
-            hits = hits.localCheckpoint(eager=True)
+        ).localCheckpoint(eager=True)
         batch_survivors = batch_survivors.join(hits, id_col, "left_anti")
         surv_sigs = surv_sigs.join(hits, id_col, "left_anti")
         # return_delta: append-only store — delta-segment sink contract

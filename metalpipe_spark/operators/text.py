@@ -2131,26 +2131,21 @@ def _kn_levels(
     return lvl
 
 
-def _gram_keys(
-    df: DataFrame, n: int, text_col: str, id_col: str, hashed: bool = False
-) -> DataFrame:
+def _gram_keys(df: DataFrame, n: int, text_col: str, id_col: str) -> DataFrame:
     """Shared gram/probe-key construction for the backoff scorers:
     single-pass shifted-slice order-``n`` grams (docs shorter than
     ``n`` emit one never-matching pseudo-gram), then per-gram lookup
-    keys — ``__s1..__sn`` (the gram's LAST k words — probability
-    probes) and ``__c1..__c{n-1}`` (the k words preceding the final
-    word — backoff-weight probes) — plus the doc's gram count ``__n``
-    for the mean.
+    keys — 8-byte ``xxhash64`` probe keys ``__hs1..__hsn`` over the
+    gram's LAST k words (probability probes) and ``__hc1..__hc{n-1}``
+    over the k words preceding the final word (backoff-weight probes)
+    — plus the gram's token array ``__g`` (the exact verify of every
+    hash match, see :func:`_probe_model`) and the doc's gram count
+    ``__n`` for the mean.
 
-    Grams are carried as token ARRAYS (``__g``): the previous
-    string-concat-then-split round trip built every gram string only to
-    split it again (r18, guide §2.3 narrower types).  ``hashed=True``
-    emits 8-byte ``xxhash64`` probe keys ``__hs*``/``__hc*`` over the
-    token slices instead of assembling 2n-1 key strings per gram — the
-    consumer verifies hash matches against the token arrays, so
-    matching stays EXACT (see :func:`ngram_logprob_backoff`).  Tokens
-    come from a ``\\s+`` split so they can never contain a space:
-    array equality and joined-string equality coincide."""
+    Grams are carried as token ARRAYS and hashed per slice, so no gram
+    or key string is ever assembled (r18, guide §2.3 narrower types).
+    Tokens come from a ``\\s+`` split so they can never contain a
+    space: array equality and joined-string equality coincide."""
     df = df.withColumn("__tk", tokens(text_col))
     toks = F.col("__tk")
     count = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(0))
@@ -2171,32 +2166,69 @@ def _gram_keys(
         ).alias("__g"),
     )
     wds = F.col("__g")
-    if hashed:
-        return exploded.select(
-            id_col,
-            "__n",
-            "__g",
-            *[
-                F.xxhash64(F.slice(wds, n - k + 1, k)).alias(f"__hs{k}")
-                for k in range(1, n + 1)
-            ],
-            *[
-                F.xxhash64(F.slice(wds, n - k, k)).alias(f"__hc{k}")
-                for k in range(1, n)
-            ],
-        )
     return exploded.select(
         id_col,
         "__n",
+        "__g",
         *[
-            F.array_join(F.slice(wds, n - k + 1, k), " ").alias(f"__s{k}")
+            F.xxhash64(F.slice(wds, n - k + 1, k)).alias(f"__hs{k}")
             for k in range(1, n + 1)
         ],
         *[
-            F.array_join(F.slice(wds, n - k, k), " ").alias(f"__c{k}")
+            F.xxhash64(F.slice(wds, n - k, k)).alias(f"__hc{k}")
             for k in range(1, n)
         ],
     )
+
+
+def _probe_model(
+    keyed: DataFrame,
+    lm: DataFrame,
+    n: int,
+    prob_col: str,
+    bo_col: str,
+    ship=F.broadcast,
+) -> DataFrame:
+    """Left-join the ``2n-1`` model probes onto :func:`_gram_keys`
+    output: ``__lp{k}`` = the order-k ``prob_col`` of the gram's last k
+    words (k=1..n), ``__bo{k}`` = the order-k ``bo_col`` of the k words
+    preceding the final word (k=1..n-1); NULL where the model has no
+    such row.
+
+    Each probe joins on the 8-byte ``xxhash64`` key and verifies the
+    hash match against the token array in the join condition
+    (evaluated only for hash-equal candidates), so matching is EXACT,
+    not probabilistic: a 64-bit collision costs one discarded
+    comparison, never a wrong score.  The model side pays one split per
+    model row (model-scale).  ``ship`` wraps each model slice —
+    ``F.broadcast`` by default, identity for the shuffle-join path."""
+    toks_of = lambda: F.split(F.col("ngram"), " ")  # noqa: E731
+    probed = keyed
+    for k in range(1, n + 1):
+        lmk = lm.where(F.col("order") == k).select(
+            F.xxhash64(toks_of()).alias(f"__mh{k}"),
+            toks_of().alias(f"__ma{k}"),
+            F.col(prob_col).alias(f"__lp{k}"),
+        )
+        cond = (F.col(f"__hs{k}") == F.col(f"__mh{k}")) & (
+            F.slice(F.col("__g"), n - k + 1, k) == F.col(f"__ma{k}")
+        )
+        probed = probed.join(ship(lmk), cond, "left").drop(
+            f"__mh{k}", f"__ma{k}"
+        )
+    for k in range(1, n):
+        bok = lm.where(F.col("order") == k).select(
+            F.xxhash64(toks_of()).alias(f"__nh{k}"),
+            toks_of().alias(f"__na{k}"),
+            F.col(bo_col).alias(f"__bo{k}"),
+        )
+        cond = (F.col(f"__hc{k}") == F.col(f"__nh{k}")) & (
+            F.slice(F.col("__g"), n - k, k) == F.col(f"__na{k}")
+        )
+        probed = probed.join(ship(bok), cond, "left").drop(
+            f"__nh{k}", f"__na{k}"
+        )
+    return probed
 
 
 def backoff_chain_profile(
@@ -2245,33 +2277,22 @@ def backoff_chain_profile(
         n = int(n)
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
-    keyed = _gram_keys(df, n, text_col, id_col)
-    probed = keyed
-    for k in range(1, n + 1):
-        lmk = lm.where(F.col("order") == k).select(
-            F.col("ngram").alias(f"__s{k}"),
-            F.col("prob").alias(f"__p{k}"),
-        )
-        probed = probed.join(F.broadcast(lmk), f"__s{k}", "left")
-    for k in range(1, n):
-        bok = lm.where(F.col("order") == k).select(
-            F.col("ngram").alias(f"__c{k}"),
-            F.col("backoff").alias(f"__b{k}"),
-        )
-        probed = probed.join(F.broadcast(bok), f"__c{k}", "left")
+    probed = _probe_model(
+        _gram_keys(df, n, text_col, id_col), lm, n, "prob", "backoff"
+    )
     # depth of resolution: highest order whose prob probe hit
-    depth = F.when(F.col(f"__p{n}").isNotNull(), F.lit(n))
+    depth = F.when(F.col(f"__lp{n}").isNotNull(), F.lit(n))
     for k in range(n - 1, 0, -1):
-        depth = depth.when(F.col(f"__p{k}").isNotNull(), F.lit(k))
+        depth = depth.when(F.col(f"__lp{k}").isNotNull(), F.lit(k))
     depth = depth.otherwise(F.lit(0))
     # linear chain score: descending product of paid backoff weights
     # times the hit level's prob (missing weight = 1, ARPA rule)
-    lin = F.when(F.col(f"__p{n}").isNotNull(), F.col(f"__p{n}"))
+    lin = F.when(F.col(f"__lp{n}").isNotNull(), F.col(f"__lp{n}"))
     acc = F.lit(1.0)
     for k in range(n - 1, 0, -1):
-        acc = acc * F.coalesce(F.col(f"__b{k}"), F.lit(1.0))
+        acc = acc * F.coalesce(F.col(f"__bo{k}"), F.lit(1.0))
         lin = lin.when(
-            F.col(f"__p{k}").isNotNull(), acc * F.col(f"__p{k}")
+            F.col(f"__lp{k}").isNotNull(), acc * F.col(f"__lp{k}")
         )
     lin = F.round(lin.otherwise(F.lit(0.0)), 9)
     prof = probed.select(
@@ -2590,7 +2611,6 @@ def ngram_logprob_backoff(
     unk_token: str | None = "<unk>",
     broadcast_model: bool = True,
     resolved_unk_logprob: "float | None | object" = _UNK_UNRESOLVED,
-    hashed_probe: bool = True,
 ) -> DataFrame:
     """Backoff-aware LM scoring — the consumer half of
     :func:`train_backoff_lm` and the scorer a real multi-section ARPA
@@ -2632,26 +2652,11 @@ def ngram_logprob_backoff(
     model should rarely need it — :func:`prune_lm` exists to keep
     models broadcast-scale): the ``2n-1`` probes become plain
     equi-joins, so Catalyst/AQE picks shuffle strategies keyed on the
-    gram strings and the model never has to fit one executor.  The
-    chain arithmetic is IDENTICAL (parity unit-tested); the cost is
-    ``2n-1`` corpus shuffles instead of zero, so at crawl scale
-    pre-bucket both sides on the gram key or prune first.
-
-    ``hashed_probe=True`` (default, r18): the 2n-1 probes join on an
-    8-byte ``xxhash64`` of the gram's token slice instead of the
-    assembled key STRING — per gram the interpreted string work drops
-    from 2n-1 ``array_join`` allocations (plus the join hashing their
-    bytes) to 2n-1 int64 hashes, and the non-broadcast path shuffles
-    int64 keys instead of overlapping gram strings.  Matching stays
-    EXACT, not probabilistic: every hash match is verified against the
-    token array in the join condition (evaluated only for hash-equal
-    candidates), so a 64-bit collision costs one discarded comparison,
-    never a wrong score — outputs are bit-identical to the string path
-    (parity-pinned by test).  The model side pays one split per model
-    row (model-scale).  ``hashed_probe=False`` keeps the string-keyed
-    plan."""
-    from pyspark.sql.functions import broadcast
-
+    int64 probe hashes (:func:`_probe_model`) and the model never has
+    to fit one executor.  The chain arithmetic is IDENTICAL (parity
+    unit-tested); the cost is ``2n-1`` corpus shuffles instead of zero,
+    so at crawl scale pre-bucket both sides on the gram key or prune
+    first."""
     if n is None:
         n = lm.agg(F.max("order")).first()[0]
         if n is None:
@@ -2660,48 +2665,10 @@ def ngram_logprob_backoff(
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
     bo_src = "log_backoff" if "log_backoff" in lm.columns else "backoff"
-    keyed = _gram_keys(df, n, text_col, id_col, hashed=hashed_probe)
-    ship = broadcast if broadcast_model else (lambda d: d)
-    probed = keyed
-    if hashed_probe:
-        toks_of = lambda: F.split(F.col("ngram"), " ")  # noqa: E731
-        for k in range(1, n + 1):
-            lmk = lm.where(F.col("order") == k).select(
-                F.xxhash64(toks_of()).alias(f"__mh{k}"),
-                toks_of().alias(f"__ma{k}"),
-                F.col("logprob").alias(f"__lp{k}"),
-            )
-            cond = (F.col(f"__hs{k}") == F.col(f"__mh{k}")) & (
-                F.slice(F.col("__g"), n - k + 1, k) == F.col(f"__ma{k}")
-            )
-            probed = probed.join(ship(lmk), cond, "left").drop(
-                f"__mh{k}", f"__ma{k}"
-            )
-        for k in range(1, n):
-            bok = lm.where(F.col("order") == k).select(
-                F.xxhash64(toks_of()).alias(f"__nh{k}"),
-                toks_of().alias(f"__na{k}"),
-                F.col(bo_src).alias(f"__bo{k}"),
-            )
-            cond = (F.col(f"__hc{k}") == F.col(f"__nh{k}")) & (
-                F.slice(F.col("__g"), n - k, k) == F.col(f"__na{k}")
-            )
-            probed = probed.join(ship(bok), cond, "left").drop(
-                f"__nh{k}", f"__na{k}"
-            )
-    else:
-        for k in range(1, n + 1):
-            lmk = lm.where(F.col("order") == k).select(
-                F.col("ngram").alias(f"__s{k}"),
-                F.col("logprob").alias(f"__lp{k}"),
-            )
-            probed = probed.join(ship(lmk), f"__s{k}", "left")
-        for k in range(1, n):
-            bok = lm.where(F.col("order") == k).select(
-                F.col("ngram").alias(f"__c{k}"),
-                F.col(bo_src).alias(f"__bo{k}"),
-            )
-            probed = probed.join(ship(bok), f"__c{k}", "left")
+    probed = _probe_model(
+        _gram_keys(df, n, text_col, id_col), lm, n, "logprob", bo_src,
+        ship=F.broadcast if broadcast_model else (lambda d: d),
+    )
     # Highest order first; each step DOWN pays the next backoff weight.
     score = F.when(F.col(f"__lp{n}").isNotNull(), F.col(f"__lp{n}"))
     bosum = F.lit(0.0)

@@ -48,6 +48,18 @@ def _git_head() -> str:
     return out.stdout.strip()
 
 
+def _load_gate_state() -> dict | None:
+    """The recorded green-close state, or None when none is recorded: a
+    missing, unreadable, corrupt or non-object gate file all mean "no
+    green close", never a crash of the close itself."""
+    try:
+        with open(GATE_STATE) as f:
+            state = json.load(f)
+    except (OSError, ValueError):
+        return None
+    return state if isinstance(state, dict) else None
+
+
 def _steal_pct(window: float = 5.0) -> float:
     """Instantaneous hypervisor-steal percentage over a short window."""
 
@@ -107,10 +119,7 @@ def main() -> int:
         # Mechanical precondition (ADVICE r17): the retake is only legal
         # when a FULL close already ran green at this exact HEAD.
         head = _git_head()
-        state = None
-        if os.path.exists(GATE_STATE):
-            with open(GATE_STATE) as f:
-                state = json.load(f)
+        state = _load_gate_state()
         if (
             not state
             or state.get("round") != rnd

@@ -11,6 +11,14 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = os.environ.get("MPS_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+def _slow_key(nodeid: str) -> str:
+    """``<file basename>::<rest of the nodeid>`` — stable under
+    different invocation directories/rootdirs, and whole even when a
+    parameter id contains ``/`` (URL cases)."""
+    path, sep, rest = nodeid.partition("::")
+    return os.path.basename(path) + sep + rest
+
+
 def _slow_manifest() -> set[str]:
     """``<file>::<test>`` keys of the measured slow tier — data-driven
     marking (VERDICT r17 task 1) so the tiers are regenerable from a
@@ -22,9 +30,7 @@ def _slow_manifest() -> set[str]:
             for ln in f:
                 ln = ln.strip()
                 if ln and not ln.startswith("#"):
-                    # Key on basename::test so the match is stable under
-                    # different invocation directories/rootdirs.
-                    out.add(ln.split("/")[-1])
+                    out.add(_slow_key(ln))
     except OSError:
         pass
     return out
@@ -35,7 +41,7 @@ def pytest_collection_modifyitems(config, items):
     if not slow:
         return
     for item in items:
-        if item.nodeid.split("/")[-1] in slow:
+        if _slow_key(item.nodeid) in slow:
             item.add_marker(pytest.mark.slow)
 
 

@@ -103,12 +103,28 @@ def test_argmax_tie_breaks_to_first_class(spark):
 
 def test_null_text_is_total(spark):
     """NULL text coalesces to '' and still yields a prediction (the
-    detect_language NULL contract)."""
-    df = spark.createDataFrame([(None,)], "text string")
-    assert (
-        df.select(detect_language_model("text").alias("p")).first()["p"]
-        in LANGID_CLASSES
+    detect_language NULL contract) — for all three detectors, and over
+    the empty, whitespace-only and 1-char edge cases (the char model's
+    <2-char empty-gram guard)."""
+    from metalpipe_spark.operators.langid import (
+        CJK_CLASSES,
+        detect_language_cjk,
+        detect_language_routed,
     )
+
+    df = spark.createDataFrame(
+        [(None,), ("",), (" ",), ("あ",), ("x",)], "text string"
+    )
+    rows = df.select(
+        detect_language_model("text").alias("tok"),
+        detect_language_cjk("text").alias("chr"),
+        detect_language_routed("text").alias("routed"),
+    ).collect()
+    assert len(rows) == 5
+    for r in rows:
+        assert r["tok"] in LANGID_CLASSES
+        assert r["chr"] in CJK_CLASSES
+        assert r["routed"] in LANGID_CLASSES
 
 
 def test_script_fractions_match_trainer_and_sql(spark):
@@ -122,7 +138,7 @@ def test_script_fractions_match_trainer_and_sql(spark):
     from metalpipe_spark.operators.langid import (
         _WS_CLASS,
         SCRIPT_BLOCKS,
-        script_fractions,
+        _spark_script_fracs_sql,
         script_fractions_sql,
     )
 
@@ -136,9 +152,8 @@ def test_script_fractions_match_trainer_and_sql(spark):
         # the explicit class exists to remove)
     ]
     df = spark.createDataFrame([(t,) for t in samples], "text string")
-    spark_rows = df.select(
-        "text", F.array(*script_fractions(F.col("text"))).alias("fr")
-    ).collect()
+    spark_fr = "array(" + ", ".join(_spark_script_fracs_sql("text")) + ")"
+    spark_rows = df.select("text", F.expr(spark_fr).alias("fr")).collect()
     sql_exprs = ", ".join(
         f"{e} AS f{i}" for i, e in enumerate(script_fractions_sql("text"))
     )
@@ -293,11 +308,11 @@ def test_routed_detector_dispatches_by_script(spark):
 
 
 def test_sql_text_literals_escape_and_roundtrip(spark):
-    """The SQL-text literal builders (_sarray_lit/_dmatrix_lit — the
+    """The SQL-text literal builders (_sarray_lit/_dmatrix_sql — the
     py4j-economics fix) must round-trip hostile strings (quotes,
     backslashes, non-ASCII) and repr-exact doubles bit-for-bit; a
     future word list containing l'eau must not break the parser."""
-    from metalpipe_spark.operators.langid import _dmatrix_lit, _sarray_lit
+    from metalpipe_spark.operators.langid import _dmatrix_sql, _sarray_lit
 
     hostile = ["l'eau", "back\\slash", "both\\'mixed", "日本語", "a  b"]
     df = spark.range(1)
@@ -305,54 +320,5 @@ def test_sql_text_literals_escape_and_roundtrip(spark):
     assert list(got) == hostile
 
     w = [[0.1 + 0.2, -1.5e-7, 123456.789012345, float(2**53 - 1)], [0.0, -0.0, 1e300, 5e-324]]
-    got = df.select(_dmatrix_lit(w).alias("m")).first()["m"]
+    got = df.select(F.expr(_dmatrix_sql(w)).alias("m")).first()["m"]
     assert [list(r) for r in got] == w  # exact doubles, not approximations
-
-
-def test_sql_fast_path_matches_column_path(spark):
-    """The one-F.expr serving trees (r17: ~1.3 s of driver py4j per
-    plan build collapsed to one JVM parse) must agree EXACTLY with the
-    Column-built trees — same argmax over the same rounded logits —
-    on every script family, raw corpus text, and the null/empty/1-char
-    edge cases (the <2-char gram guard and the coalesce)."""
-    from metalpipe_spark.operators.langid import (
-        detect_language_cjk,
-        detect_language_model,
-        detect_language_routed,
-        synthetic_cjk_text,
-        synthetic_multilingual_text,
-    )
-
-    langs = ["en", "de", "ru", "ar", "hi", "zh", "ja", "ko", "pt"]
-    mix = F.array(*[F.lit(c) for c in langs])
-    base = spark.range(90).select(
-        F.col("id").alias("doc_id"),
-        F.element_at(
-            mix, F.pmod(F.col("id"), F.lit(len(langs))).cast("int") + 1
-        ).alias("lang"),
-    )
-    synth = base.select(
-        "doc_id",
-        F.when(
-            F.col("lang").isin("zh", "ja", "ko"),
-            synthetic_cjk_text("lang", "doc_id", salt="v1c"),
-        )
-        .otherwise(synthetic_multilingual_text("lang", "doc_id", salt="v1c"))
-        .alias("text"),
-    )
-    edge = spark.createDataFrame(
-        [(1001, None), (1002, ""), (1003, " "), (1004, "あ"), (1005, "x")],
-        "doc_id long, text string",
-    )
-    fix = synth.unionByName(edge)
-    for fast, slow in [
-        (detect_language_routed("text"), detect_language_routed(F.col("text"))),
-        (detect_language_model("text"), detect_language_model(F.col("text"))),
-        (detect_language_cjk("text"), detect_language_cjk(F.col("text"))),
-    ]:
-        bad = (
-            fix.select(fast.alias("a"), slow.alias("b"))
-            .where("NOT (a <=> b)")
-            .count()
-        )
-        assert bad == 0

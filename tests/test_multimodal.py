@@ -786,36 +786,3 @@ def test_audio_energy_segments_islands_and_edges(spark):
         audio_energy_segments(df, frame=0)
     with pytest.raises(ValueError, match="hop"):
         audio_energy_segments(df, frame=10, hop=0)
-
-
-def test_audio_energy_segments_arrow_parity(spark):
-    """The Arrow/numpy twin produces bit-identical segments to the
-    JVM-HOF oracle face, including overlapping hops; bad impl raises."""
-    import pytest
-
-    from metalpipe_spark.operators.multimodal import audio_energy_segments
-
-    def clip(pattern, block=60):
-        out = []
-        for p in pattern:
-            out += [4.0 if p else 1.0] * block
-        return out
-
-    df = spark.createDataFrame(
-        [(i, clip([(i >> b) & 1 for b in range(5)])) for i in range(16)],
-        "id long, waveform array<double>",
-    )
-    for frame, hop in ((30, 30), (60, 20), (45, 45)):
-        a = sorted(
-            map(tuple, audio_energy_segments(
-                df, frame=frame, hop=hop, threshold=2.0
-            ).collect())
-        )
-        b = sorted(
-            map(tuple, audio_energy_segments(
-                df, frame=frame, hop=hop, threshold=2.0, impl="arrow"
-            ).collect())
-        )
-        assert a == b, (frame, hop)
-    with pytest.raises(ValueError, match="impl"):
-        audio_energy_segments(df, impl="gpu")

@@ -2805,41 +2805,12 @@ def test_edit_distance_join_exact_vs_bruteforce(spark):
     got_c = {(r["id1"], r["id2"]) for r in capped.collect()}
     got_f = {(r["id1"], r["id2"]) for r in full.collect()}
     assert got_c <= got_f
+    # Both self-join sides read the variant checkpoint, not two explode
+    # subtrees.
+    plan = full._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" in plan
     with pytest.raises(ValueError, match="max_edits"):
         edit_distance_join(df, "name", max_edits=0)
-
-
-def test_edit_distance_join_cache_variants_parity(spark):
-    """cache_variants only changes the physical plan (one variant-
-    explode pass feeding both self-join sides instead of two): the
-    pair set, strings and distances are identical with it on and off,
-    with and without the bucket cap (r17 optimization §14)."""
-    from metalpipe_spark.operators.joins import edit_distance_join
-
-    rows = [
-        (1, "kitten"), (2, "sitten"), (3, "mitten"), (4, "abc"),
-        (5, "abd"), (6, ""), (7, "kitten"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, name string")
-    for cap in (None, 3):
-        on = sorted(
-            map(tuple, edit_distance_join(
-                df, "name", max_edits=1, max_bucket_size=cap,
-                cache_variants=True,
-            ).collect())
-        )
-        off = sorted(
-            map(tuple, edit_distance_join(
-                df, "name", max_edits=1, max_bucket_size=cap,
-                cache_variants=False,
-            ).collect())
-        )
-        assert on == off
-        assert on  # the fixture produces real pairs
-    # The default path reads the checkpoint, not two explode subtrees.
-    plan = edit_distance_join(df, "name", max_edits=1)._jdf.queryExecution(
-    ).executedPlan().toString()
-    assert "ExistingRDD" in plan or "Scan ExistingRDD" in plan
 
 
 def test_exact_quantile_null_group_and_bins_guard(spark):
@@ -3995,57 +3966,62 @@ def test_backoff_scorer_resolved_unk_parity(spark):
     assert score(resolved_unk_logprob=None) == score(unk_token=None)
 
 
-def test_backoff_scorer_hashed_probe_parity(spark):
-    """hashed_probe=True (r18) joins the 2n-1 model probes on xxhash64
-    of the gram's token slice with an exact token-array verify instead
-    of assembled key strings — a pure plan change: scores must be
-    row-identical to the string-keyed path for every resolution class
-    (top-order hit, backoff chains, <unk> chain, flat OOV floor, short
-    docs, empty/NULL text, repeated whitespace) under both broadcast
-    and shuffle probe strategies, exact and plain faces."""
-    from metalpipe_spark.operators.text import (
-        ngram_logprob_backoff,
-        train_backoff_lm,
-    )
+def test_backoff_scorer_probe_strategies_agree_on_edge_docs(spark):
+    """The 2n-1 model probes join on xxhash64 of the gram's token slice
+    with an exact token-array verify; the broadcast and shuffle probe
+    strategies must score every resolution class identically — top-order
+    hit, backoff chains, <unk> chain, short docs, empty/NULL text,
+    repeated whitespace.  (The flat OOV floor reads no probe.)"""
+    from metalpipe_spark.operators.text import ngram_logprob_backoff
 
-    corpus = spark.createDataFrame(
-        [(10, "the cat sat on the mat"), (11, "a cat ran on a log"),
-         (12, "the cat the cat ran")],
-        ["doc_id", "text"],
-    )
-    lm = train_backoff_lm(corpus, n=3).localCheckpoint()
+    # A slice of train_backoff_lm's n=3 model over "the cat sat on the
+    # mat" / "a cat ran on a log" / "the cat the cat ran", plus <unk>.
+    lm = spark.createDataFrame(
+        [("<unk>", 1, -3.0, None),
+         ("a", 1, -0.929418926, 0.026328939),
+         ("cat", 1, -0.62838893, -0.019428552),
+         ("mat", 1, -1.230448921, None),
+         ("on", 1, -0.929418926, 0.0641175),
+         ("ran", 1, -0.929418926, -0.070581074),
+         ("sat", 1, -1.230448921, -0.070581074),
+         ("the", 1, -0.62838893, -0.274701057),
+         ("a cat", 2, -0.903089987, 0.037788561),
+         ("cat ran", 2, -0.505149978, 0.0),
+         ("cat sat", 2, -1.204119983, 0.0),
+         ("on the", 2, -0.903089987, -0.096910013),
+         ("the cat", 2, -0.249877473, 0.124938737),
+         ("a cat ran", 3, -0.602059991, None),
+         ("on the mat", 3, -0.602059991, None),
+         ("the cat sat", 3, -1.079181246, None)],
+        "ngram string, order int, logprob double, log_backoff double",
+    ).localCheckpoint()
     docs = spark.createDataFrame(
         [(0, "the cat sat"), (1, "the cat zzz"), (2, "zzz qqq www"),
          (3, "ab"), (4, ""), (5, None), (6, "  the   cat  sat "),
          (7, "on the mat a cat ran")],
-        ["doc_id", "text"],
+        "doc_id long, text string",
+    ).localCheckpoint()
+    # Both strategies in ONE action (checkpointed inputs: a
+    # LocalRelation plan here costs seconds of driver-side planning).
+    bcast, shuffled = (
+        ngram_logprob_backoff(
+            docs, lm, n=3, exact=True, broadcast_model=bm,
+            resolved_unk_logprob=-3.0,
+        ).withColumn("bm", F.lit(bm))
+        for bm in (True, False)
     )
-    lm_unk = lm.limit(0).sparkSession.createDataFrame(
-        [("<unk>", 1, 1, 1, 0.001, -3.0, None, None)], lm.schema
-    ).unionByName(lm)
-    for model in (lm, lm_unk):
-        for bm in (True, False):
-            for exact in (True, False):
-                a = ngram_logprob_backoff(
-                    docs, model, n=3, exact=exact, broadcast_model=bm,
-                    hashed_probe=False,
-                ).orderBy("doc_id").collect()
-                b = ngram_logprob_backoff(
-                    docs, model, n=3, exact=exact, broadcast_model=bm,
-                    hashed_probe=True,
-                ).orderBy("doc_id").collect()
-                if exact:
-                    assert a == b, (bm, exact)
-                else:
-                    # plain-double face: sums are order-sensitive by
-                    # documented design; the per-gram scores are equal,
-                    # so any plan-order drift is bounded by an ulp.
-                    for ra, rb in zip(a, b):
-                        assert ra["doc_id"] == rb["doc_id"]
-                        va, vb = ra["mean_logprob"], rb["mean_logprob"]
-                        assert abs(va - vb) <= 1e-12 * max(
-                            1.0, abs(va)
-                        ), (bm, ra, rb)
+    rows = bcast.unionByName(shuffled).collect()
+    got = {
+        bm: sorted(
+            (r["doc_id"], r["mean_logprob"]) for r in rows if r["bm"] == bm
+        )
+        for bm in (True, False)
+    }
+    assert [d for d, _ in got[True]] == list(range(8))
+    assert got[True] == got[False]
+    # the <unk> chain pays the context's backoff weights: "the cat zzz"
+    # backs off through "the cat" and "cat" before reaching <unk>
+    assert got[True][1][1] == round(0.124938737 - 0.019428552 - 3.0, 9)
 
 
 def test_lm_parquet_exchange_and_shuffle_scorer(spark, tmp_path):

@@ -970,39 +970,6 @@ def test_incremental_semantic_dedup_scaled_batches(spark):
     assert store.count() == 120  # survivors only
 
 
-def test_incremental_semantic_dedup_scaled_checkpoint_parity(spark):
-    """checkpoint_batch=True is a pure materialization knob (r17: the
-    loser ID SET is checkpointed too, so the in-batch GEMM runs once
-    per wave instead of once per consumer) — fresh ids and store rows
-    must match the uncheckpointed run exactly."""
-    from metalpipe_spark.operators.similarity import (
-        fit_semantic_cells,
-        incremental_semantic_dedup_scaled,
-    )
-
-    df = _golden_corpus(spark, 120)
-    cells = fit_semantic_cells(
-        df, target_cell_size=20, expected_corpus_rows=150, seed=7
-    ).cache()
-    b1 = df.where("vec_id < 1000")
-    b2 = df.where("vec_id >= 1000")
-    out = {}
-    for ckpt in (False, True):
-        store = None
-        fresh_ids = []
-        for b in (b1, b2):
-            fresh, store = incremental_semantic_dedup_scaled(
-                b, store, cells, threshold=0.999999, checkpoint_batch=ckpt
-            )
-            store = store.localCheckpoint(eager=True)
-            fresh_ids += [r["vec_id"] for r in fresh.collect()]
-        out[ckpt] = (
-            sorted(fresh_ids),
-            sorted(r["vec_id"] for r in store.select("vec_id").collect()),
-        )
-    assert out[True] == out[False]
-
-
 def test_incremental_semantic_dedup_scaled_jobs_inherit_group(spark):
     """The concurrent survivor-checkpoint jobs run from pool threads,
     which under pinned-thread mode get FRESH Spark local properties —
@@ -1027,7 +994,7 @@ def test_incremental_semantic_dedup_scaled_jobs_inherit_group(spark):
     sc.setJobGroup(group, "checkpoint-inheritance probe")
     try:
         fresh, store = incremental_semantic_dedup_scaled(
-            df, None, cells, threshold=0.999999, checkpoint_batch=True
+            df, None, cells, threshold=0.999999
         )
         fresh.collect()
     finally:
