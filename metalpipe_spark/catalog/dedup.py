@@ -7,6 +7,7 @@ DuckDB oracle (see operators/dedup.py for the scale rationale).
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -280,7 +281,7 @@ def clear_shared_stages(kinds: set[str] | None = None) -> None:
         _df, rdd = _SHARED_STAGES.pop(k)
         try:
             rdd.unpersist(False)
-        except Exception:
+        except Py4JError:
             pass  # context already stopped
 
 

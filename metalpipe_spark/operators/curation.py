@@ -133,15 +133,20 @@ def pack_shards(
 
 
 def prefix_sum_range_stage(
-    df: DataFrame, order_col: str, num_partitions: int
+    df: DataFrame, order_col: str, num_partitions: int | None
 ) -> DataFrame:
     """The pre-checkpoint stage of the two-pass prefix sum: range-
     partition on the global order key, then sort within partitions —
     every partition holds a contiguous, locally-sorted slice of the
     global order, and NO single-partition sort or Window ever runs.
-    Split out so plan tests can pin the RangePartitioning skeleton
-    (the lazy checkpoint in :func:`exclusive_prefix_sum` hides it from
-    the final explain)."""
+    ``num_partitions=None`` leaves the count to Spark: the shuffle
+    partition count, which adaptive execution coalesces (contiguous
+    ranges only) to the data's size, so a small input does not pay a
+    Python task per empty-ish range.  Split out so plan tests can pin
+    the RangePartitioning skeleton (the lazy checkpoint in
+    :func:`exclusive_prefix_sum` hides it from the final explain)."""
+    if num_partitions is None:
+        return df.repartitionByRange(F.col(order_col)).sortWithinPartitions(order_col)
     return df.repartitionByRange(
         num_partitions, F.col(order_col)
     ).sortWithinPartitions(order_col)
@@ -175,7 +180,6 @@ def exclusive_prefix_sum(
         StructType,
     )
 
-    spark = df.sparkSession
     integral = isinstance(
         df.schema[weight_col].dataType,
         (ByteType, ShortType, IntegerType, LongType),
@@ -183,7 +187,6 @@ def exclusive_prefix_sum(
     out_type, np_type = (
         (LongType(), "int64") if integral else (DoubleType(), "float64")
     )
-    p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     # NULL weights count as 0 (SQL SUM semantics, matching the oracle):
     # a NaN reaching np.cumsum would poison every later prefix in the
     # partition into INT64_MIN values with no error, and an all-NULL
@@ -194,7 +197,7 @@ def exclusive_prefix_sum(
     # and the totals pass share ONE materialization) — which also hides
     # the RangePartitioning exchange from the final explain; plan pins
     # for the skeleton go against prefix_sum_range_stage directly.
-    ranged = prefix_sum_range_stage(df, order_col, p).localCheckpoint(
+    ranged = prefix_sum_range_stage(df, order_col, num_partitions).localCheckpoint(
         eager=False
     )
     totals = {
@@ -207,9 +210,9 @@ def exclusive_prefix_sum(
         .collect()
     }
     offsets, acc = {}, 0
-    for pid in range(p):
+    for pid in sorted(totals):  # partitions without rows need no offset
         offsets[pid] = acc
-        acc += totals.get(pid, 0)
+        acc += totals[pid]
     schema = StructType(
         df.schema.fields + [StructField(out_col, out_type, False)]
     )

@@ -22,6 +22,8 @@ left-associated fold, so values are unchanged.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1597,6 +1599,18 @@ def _assign_with_matrix(
     )
 
 
+def _thread_target_wrapper(spark: SparkSession) -> Callable:
+    """``inheritable_thread_target(spark)``: wraps a thread target so its
+    jobs carry the caller's Spark local properties (job group, tags,
+    scheduler pool).  With pinned-thread mode off it returns the session
+    itself — properties are shared JVM-side there, so targets run
+    as-is.  Any other failure (a stopped context) propagates."""
+    from pyspark import inheritable_thread_target
+
+    wrap = inheritable_thread_target(spark)
+    return (lambda fn: fn) if wrap is spark else wrap
+
+
 def incremental_semantic_dedup_scaled(
     new_docs: DataFrame,
     store: DataFrame | None,
@@ -1683,19 +1697,7 @@ def incremental_semantic_dedup_scaled(
     # in-flight checkpoint job (ADVICE r17).
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark import inheritable_thread_target
-
-    spark = new_docs.sparkSession
-
-    def _inherit(fn):
-        try:
-            return inheritable_thread_target(spark)(fn)
-        except TypeError:
-            # Pinned-thread mode off: the session form degrades to
-            # returning the session itself; properties are shared
-            # JVM-side there anyway, so run the target as-is.
-            return fn
-
+    _inherit = _thread_target_wrapper(new_docs.sparkSession)
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_bs = pool.submit(
             _inherit(lambda: batch_survivors.localCheckpoint(eager=True))

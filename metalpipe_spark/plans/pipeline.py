@@ -22,6 +22,19 @@ Config shape (reference parity, source/configuration.rst:6-44):
     paths:
       - [read_customers, only_building]
 
+A node's ``options`` are the keyword arguments of the operator its
+class wraps (the reference passes them straight to the node class,
+bin/metalpipe:85-107): same names, same defaults, and a key the
+operator does not take raises ``ValueError`` naming the node and the
+key.  ``OPERATOR_NODES`` lists the classes that are exactly one
+operator; every other class documents where its YAML differs.  The
+classes that wrap no operator (ParquetReader, ParquetWriter,
+SQLExecute, SimpleTransforms, GetEnvironmentVariables and the
+pass-through sinks) read only the keys they document.  The
+universal options (``input_mapping``, ``post_process_*``,
+``break_test``, ``max_messages_received``, ``throttle``) apply to every
+node and are taken off before the node's own options bind.
+
 Fan-out = one node feeding several paths (the DataFrame is reused; Spark
 may recompute or reuse the scan — caching is an explicit option).
 Fan-in = several nodes feeding one (the reference interleaves messages,
@@ -38,6 +51,7 @@ secrets YAML files are replaced throughout the config tree
 
 from __future__ import annotations
 
+import inspect
 import os
 from collections.abc import Callable, Mapping
 from dataclasses import dataclass, field
@@ -47,30 +61,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from metalpipe_spark.operators.aggregate import (
-    aggregate_values_node,
-    batch_messages,
-    row_stat_collector,
-)
-from metalpipe_spark.operators.filtering import (
-    filter_node,
-    random_sample,
-    systematic_sample,
-)
+from metalpipe_spark.operators.filtering import random_sample, systematic_sample
 from metalpipe_spark.operators.joins import enrich_join
-from metalpipe_spark.operators.transform import (
-    insert_data,
-    remapper,
-    serializer,
-    simple_transforms,
-    substitute_regex,
-)
-from metalpipe_spark.sources.emitters import (
-    constant_emitter,
-    counter_of_things,
-    sequence_emitter,
-)
-from metalpipe_spark.sources.readers import csv_reader, local_file_reader
+from metalpipe_spark.operators.transform import simple_transforms
+from metalpipe_spark.sources.readers import csv_reader
 from metalpipe_spark.udf_registry import load_function, wrap_udf
 
 # ---------------------------------------------------------------------------
@@ -110,6 +104,109 @@ def _one(upstreams: list[DataFrame], cls: str) -> DataFrame:
     return df
 
 
+def _bind(fn: Callable, cls: str, spark, upstreams, opts: dict, *inputs):
+    """Run operator ``fn`` for node class ``cls`` with the node's options
+    as its keyword arguments — the reference passes a node's YAML
+    ``options`` straight to the node class (bin/metalpipe:85-107), so an
+    option's name and default live once, in the operator's signature.
+
+    ``inputs`` fill the operator's leading parameters; without them the
+    first parameter gets the session when it is named ``spark`` (a
+    source) and the node's upstream otherwise (a transform).  An option
+    that is not one of the remaining parameters — a typo, a private
+    ``_`` parameter, a missing required one — raises instead of being
+    ignored."""
+    sig = inspect.signature(fn)
+    if not inputs:
+        first = next(iter(sig.parameters))
+        inputs = (spark if first == "spark" else _one(upstreams, cls),)
+    private = [k for k in opts if k.startswith("_")]
+    if private:
+        raise ValueError(f"{cls}: private parameter(s) {private} are not options")
+    try:
+        sig.bind(*inputs, **opts)
+    except TypeError as exc:
+        raise ValueError(
+            f"{cls}: {exc} (its options are {fn.__name__}'s keyword arguments)"
+        ) from None
+    return fn(*inputs, **opts)
+
+
+def _default(fn: Callable, opts: Mapping, name: str) -> Any:
+    """Option ``name`` as ``fn`` sees it: the node's value, else the
+    default in ``fn``'s signature."""
+    return opts.get(name, inspect.signature(fn).parameters[name].default)
+
+
+def _rename(opts: dict, **names: str) -> dict:
+    """Map YAML option spellings onto operator parameter names
+    (``yaml_key="param"``) before :func:`_bind`."""
+    for key, param in names.items():
+        if key in opts:
+            opts[param] = opts.pop(key)
+    return opts
+
+
+def _operator_node(cls: str, path: str) -> NodeBuilder:
+    def build(spark, upstreams, opts):
+        # Resolved per build, like the reference's import-by-name class
+        # lookup: importing this module loads no operator module, and a
+        # node runs whatever the operator's module currently exports.
+        return _bind(load_function(f"metalpipe_spark.{path}"), cls, spark, upstreams, opts)
+
+    return build
+
+
+# Node classes that ARE one operator: options bind to its signature.
+OPERATOR_NODES: dict[str, str] = {
+    # sources
+    "CSVReader": "sources.readers.csv_reader",
+    "LocalFileReader": "sources.readers.local_file_reader",
+    "JSONLReader": "sources.readers.jsonl_reader",
+    "ArpaReader": "sources.readers.load_arpa",
+    "WETReader": "sources.warc.read_wet",
+    "WARCReader": "sources.warc.read_warc",
+    "WETStream": "sources.warc.stream_wet",
+    "ConstantEmitter": "sources.emitters.constant_emitter",
+    "SequenceEmitter": "sources.emitters.sequence_emitter",
+    "CounterOfThings": "sources.emitters.counter_of_things",
+    # transforms
+    "Filter": "operators.filtering.filter_node",
+    "Remapper": "operators.transform.remapper",
+    "InsertData": "operators.transform.insert_data",
+    "SubstituteRegex": "operators.transform.substitute_regex",
+    "Serializer": "operators.transform.serializer",
+    "BatchMessages": "operators.aggregate.batch_messages",
+    "AggregateValues": "operators.aggregate.aggregate_values_node",
+    "RowStatCollector": "operators.aggregate.row_stat_collector",
+    "PivotPinned": "operators.aggregate.pivot_pinned",
+    # training-data curation (beyond the reference; COVERAGE.md)
+    "TrainNgramLM": "operators.text.train_ngram_lm",
+    "PruneLM": "operators.text.prune_lm",
+    "ScrubPII": "operators.text.scrub_pii",
+    "ChunkDocuments": "operators.text.chunk_documents",
+    "NormalizedDedup": "operators.text.normalized_dedup",
+    "ExactSubstrDedup": "operators.dedup.exact_substr_dedup",
+    "ParagraphDedup": "operators.dedup.chunk_level_dedup",
+    "BoilerplateRemoval": "operators.dedup.boilerplate_chunk_removal",
+    "EmbedDocuments": "operators.inference.embed_documents",
+    "StratifiedSample": "operators.curation.stratified_sample",
+    "TopKPerGroup": "operators.curation.topk_per_group",
+    "PackShards": "operators.curation.pack_shards",
+    "TokenBudgetSample": "operators.curation.token_budget_sample",
+    "CurriculumOrder": "operators.curation.curriculum_order",
+    "TemperatureEpochs": "operators.curation.temperature_resample_epochs",
+    "DomainMixSample": "operators.curation.domain_mix_sample",
+    "SplitCorpus": "operators.curation.split_corpus",
+    "GlobalShuffle": "operators.curation.global_shuffle",
+    "HostRank": "operators.web.host_rank",
+}
+NODE_CLASSES.update({cls: _operator_node(cls, path) for cls, path in OPERATOR_NODES.items()})
+
+# The adapters below do more than call one operator, or their YAML
+# deliberately differs from it; each docstring states how.
+
+
 # -- sources ----------------------------------------------------------------
 
 
@@ -118,110 +215,37 @@ def _parquet_reader(spark, upstreams, opts):
     return spark.read.parquet(opts["path"])
 
 
-@node_class("CSVReader")
-def _csv_reader(spark, upstreams, opts):
-    return csv_reader(
-        spark,
-        opts["path"],
-        header=opts.get("header", True),
-        infer_schema=opts.get("infer_schema", True),
-    )
-
-
 @node_class("CSVToDictionaryList")
 def _csv_to_dictionary_list(spark, upstreams, opts):
     """node.py:1080-1088 — parse a CSV and emit the ENTIRE row list as ONE
-    message: a single row holding array<struct>.  ``infer_schema`` defaults
-    off to match ``csv.DictReader``'s all-strings dicts.  The one-message
-    shape is inherently small-data (the reference buffers the whole list in
-    one dict), so the collect_list to a single row is by-construction
-    bounded — large CSVs belong on the per-row ``CSVReader`` path."""
-    df = csv_reader(
-        spark,
-        opts["path"],
-        header=opts.get("header", True),
-        infer_schema=opts.get("infer_schema", False),
-    )
-    out_key = opts.get("output_key", "rows")
+    message: a single row holding array<struct> under ``output_key``
+    (default ``rows``).  ``infer_schema`` defaults OFF here (csv_reader
+    defaults on) to match ``csv.DictReader``'s all-strings dicts.  The
+    one-message shape is inherently small-data (the reference buffers
+    the whole list in one dict), so the collect_list to a single row is
+    by-construction bounded — large CSVs belong on the per-row
+    ``CSVReader`` path."""
+    out_key = opts.pop("output_key", "rows")
+    opts.setdefault("infer_schema", False)
+    df = _bind(csv_reader, "CSVToDictionaryList", spark, upstreams, opts)
     return df.agg(F.collect_list(F.struct(*df.columns)).alias(out_key))
-
-
-@node_class("LocalFileReader")
-def _local_file_reader(spark, upstreams, opts):
-    return local_file_reader(spark, opts["path"], serialize=opts.get("serialize", False))
-
-
-@node_class("JSONLReader")
-def _jsonl_reader(spark, upstreams, opts):
-    from metalpipe_spark.sources.readers import jsonl_reader
-
-    return jsonl_reader(
-        spark,
-        opts["path"],
-        schema=opts.get("schema"),
-        multiline=opts.get("multiline", False),
-        corrupt_col=opts.get("corrupt_col"),
-    )
-
-
-@node_class("WETReader")
-def _wet_reader(spark, upstreams, opts):
-    """Common Crawl WET (text-conversion) archives -> one row per
-    record (sources/warc.py:read_wet).  ``mode: exact`` opts into the
-    Content-Length byte walk for payloads that may contain the record
-    framing; the default delimiter split is pure JVM scan."""
-    from metalpipe_spark.sources.warc import read_wet
-
-    types = opts.get("record_types", ["conversion"])
-    return read_wet(
-        spark,
-        opts["path"],
-        mode=opts.get("mode", "delimiter"),
-        warc_version=str(opts.get("warc_version", "1.0")),
-        record_types=tuple(types) if types is not None else None,
-        on_error=opts.get("on_error", "fail"),
-    )
-
-
-@node_class("WARCReader")
-def _warc_reader(spark, upstreams, opts):
-    """Raw WARC response captures -> header columns + http_status /
-    http_content_type / binary payload (sources/warc.py:read_warc);
-    chain HtmlExtract to turn text/html payloads into training text."""
-    from metalpipe_spark.sources.warc import read_warc
-
-    types = opts.get("record_types", ["response"])
-    return read_warc(
-        spark,
-        opts["path"],
-        record_types=tuple(types) if types is not None else None,
-        on_error=opts.get("on_error", "fail"),
-    )
 
 
 @node_class("HtmlExtract")
 def _html_extract(spark, upstreams, opts):
-    """Visible text of an HTML column (operators/web.py:
+    """Visible text of the HTML column ``column`` (default ``payload``)
+    into ``output_key`` (default ``text``) (operators/web.py:
     html_extract_text) — binary payloads (WARCReader's) cast to UTF-8
     first.  Pure regexp codegen; no UDF."""
     from metalpipe_spark.operators.web import html_extract_text
 
     df = _one(upstreams, "HtmlExtract")
-    col = opts.get("column", "payload")
+    col = opts.pop("column", "payload")
+    out = opts.pop("output_key", "text")
     src = F.col(col)
     if dict(df.dtypes).get(col) == "binary":
         src = src.cast("string")
-    return df.withColumn(opts.get("output_key", "text"), html_extract_text(src))
-
-
-@node_class("ArpaReader")
-def _arpa_reader(spark, upstreams, opts):
-    """KenLM .arpa LM -> (ngram, order, logprob, backoff) table; feed
-    the order-filtered slice to NgramLogprob for CCNet-style
-    perplexity filtering."""
-    from metalpipe_spark.sources.readers import load_arpa
-
-    return load_arpa(spark, opts["path"], order=opts.get("order"))
+    return df.withColumn(out, _bind(html_extract_text, "HtmlExtract", spark, upstreams, opts, src))
 
 
 @node_class("NgramLogprob")
@@ -229,22 +253,24 @@ def _ngram_logprob_node(spark, upstreams, opts):
     """Mean n-gram log-probability per document (the CCNet perplexity
     cut).  One upstream = corpus scored against an inline ``lm`` dict;
     two upstreams = [corpus, lm table] — wire an ArpaReader here.
-    ``backoff: true`` (two-upstream form only) scores through
-    ``ngram_logprob_backoff``: the lm table keeps its ``order`` and
-    backoff columns and unseen grams chain down through real
-    lower-order evidence — the KenLM/CCNet behavior for a
-    multi-section ARPA or a ``train_backoff_lm`` table."""
+    ``order`` slices a multi-order table down to one section for the
+    flat scorer.  ``backoff: true`` (two-upstream form only) scores
+    through ``ngram_logprob_backoff``: the lm table keeps its ``order``
+    and backoff columns and unseen grams chain down through real
+    lower-order evidence — the KenLM/CCNet behavior for a multi-section
+    ARPA or a ``train_backoff_lm`` table."""
     from metalpipe_spark.operators.text import (
         ngram_logprob,
         ngram_logprob_backoff,
     )
 
-    backoff = bool(opts.get("backoff", False))
-    if backoff and opts.get("order") is not None:
-        # 'order' slices a multi-order table down to the FLAT scorer's
-        # single section; the backoff scorer consumes every order by
-        # design, so combining them would silently run different
-        # semantics than the config requests (r16 advice).
+    backoff = bool(opts.pop("backoff", False))
+    order = opts.pop("order", None)
+    inline_lm = opts.pop("lm", None)
+    if backoff and order is not None:
+        # The backoff scorer consumes every order by design, so
+        # combining them would silently run different semantics than
+        # the config requests (r16 advice).
         raise ValueError(
             "NgramLogprob: 'order' is flat-path-only (it slices a "
             "multi-order table for ngram_logprob); backoff: true "
@@ -253,53 +279,23 @@ def _ngram_logprob_node(spark, upstreams, opts):
     if len(upstreams) == 2:
         corpus, lm = upstreams
         if backoff:
-            return ngram_logprob_backoff(
-                corpus,
-                lm,
-                n=opts.get("n"),
-                oov_logprob=opts.get("oov_logprob", -8.0),
-                text_col=opts.get("text_col", "text"),
-                id_col=opts.get("id_col", "doc_id"),
-            )
-        if opts.get("order") is not None:  # slice a multi-order ARPA table
-            lm = lm.where(F.col("order") == int(opts["order"]))
+            return _bind(ngram_logprob_backoff, "NgramLogprob", spark, upstreams, opts, corpus, lm)
+        if order is not None:
+            lm = lm.where(F.col("order") == int(order))
         lm = lm.select("ngram", "logprob")
-    elif len(upstreams) == 1 and "lm" in opts:
+    elif len(upstreams) == 1 and inline_lm is not None:
         if backoff:
             raise ValueError(
                 "NgramLogprob: backoff scoring needs a multi-order lm "
                 "TABLE upstream (ArpaReader / train_backoff_lm), not an "
                 "inline lm dict"
             )
-        corpus, lm = upstreams[0], dict(opts["lm"])
+        corpus, lm = upstreams[0], dict(inline_lm)
     else:
         raise ValueError(
             "NgramLogprob requires [corpus, lm] upstreams or an lm option"
         )
-    return ngram_logprob(
-        corpus,
-        lm,
-        n=opts.get("n", 2),
-        oov_logprob=opts.get("oov_logprob", -8.0),
-        text_col=opts.get("text_col", "text"),
-        id_col=opts.get("id_col", "doc_id"),
-    )
-
-
-@node_class("TrainNgramLM")
-def _train_ngram_lm_node(spark, upstreams, opts):
-    """Single-order add-k LM trainer (``operators.text.train_ngram_lm``)
-    as a config node — corpus upstream in, ``(ngram, n_count,
-    ctx_count, prob, logprob)`` model table out, wirable straight into
-    NgramLogprob's second upstream or WriteArpa."""
-    from metalpipe_spark.operators.text import train_ngram_lm
-
-    return train_ngram_lm(
-        _one(upstreams, "TrainNgramLM"),
-        n=opts.get("n", 2),
-        k=opts.get("k", 0.1),
-        text_col=opts.get("text_col", "text"),
-    )
+    return _bind(ngram_logprob, "NgramLogprob", spark, upstreams, opts, corpus, lm)
 
 
 @node_class("TrainBackoffLM")
@@ -310,43 +306,17 @@ def _train_backoff_lm_node(spark, upstreams, opts):
     interpolated Kneser-Ney; ``discount`` is a float or ``ney``;
     ``min_counts`` / ``entropy_threshold`` apply
     ``operators.text.prune_lm`` to the trained table in the same node
-    (the common train-then-prune deployment), so
+    (the common train-then-prune deployment), at the TRAINED order
+    ``n`` (3 unless set) rather than prune_lm's own ``n=None``.  So
     ``docs -> TrainBackoffLM -> NgramLogprob(backoff)`` or
     ``-> WriteArpa`` is a complete curation loop in config."""
     from metalpipe_spark.operators.text import prune_lm, train_backoff_lm
 
-    lm = train_backoff_lm(
-        _one(upstreams, "TrainBackoffLM"),
-        n=opts.get("n", 3),
-        text_col=opts.get("text_col", "text"),
-        discount=opts.get("discount", 0.75),
-        smoothing=opts.get("smoothing", "absolute"),
-    )
-    if opts.get("min_counts") is not None or opts.get(
-        "entropy_threshold"
-    ) is not None:
-        lm = prune_lm(
-            lm,
-            min_counts=opts.get("min_counts"),
-            entropy_threshold=opts.get("entropy_threshold"),
-            n=opts.get("n", 3),
-        )
+    prune = {k: opts.pop(k) for k in ("min_counts", "entropy_threshold") if k in opts}
+    lm = _bind(train_backoff_lm, "TrainBackoffLM", spark, upstreams, opts)
+    if any(v is not None for v in prune.values()):
+        lm = prune_lm(lm, **prune, n=_default(train_backoff_lm, opts, "n"))
     return lm
-
-
-@node_class("PruneLM")
-def _prune_lm_node(spark, upstreams, opts):
-    """Standalone LM pruning (``operators.text.prune_lm``) — for
-    pruning a trainer table produced elsewhere in the graph at a
-    different threshold than the trainer node applied."""
-    from metalpipe_spark.operators.text import prune_lm
-
-    return prune_lm(
-        _one(upstreams, "PruneLM"),
-        min_counts=opts.get("min_counts"),
-        entropy_threshold=opts.get("entropy_threshold"),
-        n=opts.get("n"),
-    )
 
 
 @node_class("WriteArpa")
@@ -360,25 +330,8 @@ def _write_arpa_node(spark, upstreams, opts):
     from metalpipe_spark.operators.text import write_arpa
 
     lm = _one(upstreams, "WriteArpa")
-    write_arpa(lm, opts["path"], n=opts.get("n"))
+    _bind(write_arpa, "WriteArpa", spark, upstreams, opts, lm)
     return lm
-
-
-@node_class("ConstantEmitter")
-def _constant_emitter(spark, upstreams, opts):
-    return constant_emitter(spark, opts.get("thing"), max_loops=opts.get("max_loops", 5))
-
-
-@node_class("SequenceEmitter")
-def _sequence_emitter(spark, upstreams, opts):
-    return sequence_emitter(
-        spark, opts["sequence"], max_sequences=opts.get("max_sequences", 1)
-    )
-
-
-@node_class("CounterOfThings")
-def _counter(spark, upstreams, opts):
-    return counter_of_things(spark, opts.get("start", 0), opts.get("end"))
 
 
 @node_class("GetEnvironmentVariables")
@@ -395,41 +348,6 @@ def _env_vars(spark, upstreams, opts):
 
 
 # -- transforms -------------------------------------------------------------
-
-
-@node_class("Filter")
-def _filter(spark, upstreams, opts):
-    return filter_node(
-        _one(upstreams, "Filter"),
-        opts["test"],
-        opts["test_keypath"],
-        value=opts.get("value", True),
-    )
-
-
-@node_class("Remapper")
-def _remapper(spark, upstreams, opts):
-    return remapper(_one(upstreams, "Remapper"), opts["mapping"])
-
-
-@node_class("InsertData")
-def _insert(spark, upstreams, opts):
-    return insert_data(
-        _one(upstreams, "InsertData"),
-        opts.get("values", {k: v for k, v in opts.items() if k not in ("overwrite", "overwrite_if_null")}),
-        overwrite=opts.get("overwrite", True),
-        overwrite_if_null=opts.get("overwrite_if_null", True),
-    )
-
-
-@node_class("SubstituteRegex")
-def _regex(spark, upstreams, opts):
-    return substitute_regex(
-        _one(upstreams, "SubstituteRegex"),
-        opts["key"],
-        opts["match_regex"],
-        opts["substitute_string"],
-    )
 
 
 @node_class("SimpleTransforms")
@@ -463,97 +381,62 @@ def _simple_transforms(spark, upstreams, opts):
     return simple_transforms(_one(upstreams, "SimpleTransforms"), specs)
 
 
-@node_class("Serializer")
-def _serializer(spark, upstreams, opts):
-    return serializer(_one(upstreams, "Serializer"), opts["key"], opts.get("output_key"))
-
-
 @node_class("RandomSample")
 def _sample(spark, upstreams, opts):
-    if "modulus" in opts:
-        return systematic_sample(
-            _one(upstreams, "RandomSample"), opts["key"], opts["modulus"], opts.get("remainder", 0)
-        )
-    return random_sample(_one(upstreams, "RandomSample"), opts.get("sample", 0.1), opts.get("seed"))
-
-
-@node_class("BatchMessages")
-def _batch(spark, upstreams, opts):
-    return batch_messages(
-        _one(upstreams, "BatchMessages"), opts["batch_size"], opts["key"], opts.get("payload")
-    )
-
-
-@node_class("AggregateValues")
-def _agg_values(spark, upstreams, opts):
-    return aggregate_values_node(
-        _one(upstreams, "AggregateValues"), opts["tail_path"], opts.get("output_key", "values")
-    )
-
-
-@node_class("RowStatCollector")
-def _profile(spark, upstreams, opts):
-    return row_stat_collector(_one(upstreams, "RowStatCollector"), opts.get("columns"))
+    """Bernoulli ``random_sample``, or ``systematic_sample`` when the
+    options carry a ``modulus``."""
+    fn = systematic_sample if "modulus" in opts else random_sample
+    return _bind(fn, "RandomSample", spark, upstreams, opts)
 
 
 @node_class("Join")
 def _join(spark, upstreams, opts):
     """Batch equi-join of two upstream branches (completes the intent of
-    the reference's StreamingJoin stub, node.py:1528-1552)."""
+    the reference's StreamingJoin stub, node.py:1528-1552).  YAML spells
+    ``broadcast_dim`` as ``broadcast`` and defaults it OFF (enrich_join
+    defaults on)."""
     if len(upstreams) != 2:
         raise ValueError("Join requires exactly two upstream nodes")
-    left, right = upstreams
-    return enrich_join(left, right, on=opts["on"], how=opts.get("how", "inner"),
-                       broadcast_dim=opts.get("broadcast", False))
+    opts.setdefault("broadcast_dim", opts.pop("broadcast", False))
+    return _bind(enrich_join, "Join", spark, upstreams, opts, *upstreams)
 
 
 @node_class("CorpusReport")
 def _corpus_report_node(spark, upstreams, opts):
     """One-row dataset-card summary of the upstream corpus
-    (operators/text.py:corpus_report)."""
+    (operators/text.py:corpus_report).  YAML spells the ``*_col``
+    parameters ``text_column`` / ``id_column`` / ``lang_column`` /
+    ``source_column``."""
     from metalpipe_spark.operators.text import corpus_report
 
-    return corpus_report(
-        _one(upstreams, "CorpusReport"),
-        text_col=opts.get("text_column", "text"),
-        id_col=opts.get("id_column", "doc_id"),
-        lang_col=opts.get("lang_column", "lang"),
-        source_col=opts.get("source_column", "source"),
-        exact_distinct=opts.get("exact_distinct", True),
-    )
+    _rename(opts, text_column="text_col", id_column="id_col",
+            lang_column="lang_col", source_column="source_col")
+    return _bind(corpus_report, "CorpusReport", spark, upstreams, opts)
 
 
 @node_class("BM25TopK")
 def _bm25_topk_node(spark, upstreams, opts):
     """BM25 keyword retrieval over the upstream corpus (operators/
-    text.py:bm25_topk); ``terms`` is the query bag."""
+    text.py:bm25_topk).  YAML spells ``query_terms`` / ``text_col`` /
+    ``id_col`` as ``terms`` / ``text_column`` / ``id_column``."""
     from metalpipe_spark.operators.text import bm25_topk
 
-    return bm25_topk(
-        _one(upstreams, "BM25TopK"),
-        list(opts["terms"]),
-        k=int(opts.get("k", 10)),
-        text_col=opts.get("text_column", "text"),
-        id_col=opts.get("id_column", "doc_id"),
-    )
+    _rename(opts, terms="query_terms", text_column="text_col", id_column="id_col")
+    return _bind(bm25_topk, "BM25TopK", spark, upstreams, opts)
 
 
 @node_class("BM25Batch")
 def _bm25_batch_node(spark, upstreams, opts):
     """Batched BM25 (operators/retrieval.py): upstream order is
-    (corpus, queries); queries carry (query_id, terms array<string>)."""
+    (corpus, queries); queries carry (query_id, terms array<string>).
+    YAML spells ``text_col`` / ``id_col`` as ``text_column`` /
+    ``id_column``."""
     from metalpipe_spark.operators.retrieval import bm25_topk_batch
 
     if len(upstreams) != 2:
         raise ValueError("BM25Batch requires exactly (corpus, queries) upstreams")
-    corpus, queries = upstreams
-    return bm25_topk_batch(
-        corpus,
-        queries,
-        k=int(opts.get("k", 10)),
-        text_col=opts.get("text_column", "text"),
-        id_col=opts.get("id_column", "doc_id"),
-    )
+    _rename(opts, text_column="text_col", id_column="id_col")
+    return _bind(bm25_topk_batch, "BM25Batch", spark, upstreams, opts, *upstreams)
 
 
 @node_class("RRFFuse")
@@ -561,22 +444,19 @@ def _rrf_fuse_node(spark, upstreams, opts):
     """Reciprocal-rank fusion of two or more upstream rank lists
     (operators/retrieval.py:rrf_fuse).  ``sources`` names the upstreams
     in edge order (the fold order is by sorted name — fix the names to
-    fix the arithmetic); defaults to src0, src1, …"""
+    fix the arithmetic); defaults to src0, src1, …  YAML spells
+    ``id_col`` as ``id_column``."""
     from metalpipe_spark.operators.retrieval import rrf_fuse
 
     if len(upstreams) < 2:
         raise ValueError("RRFFuse requires at least two upstream rank lists")
-    names = opts.get("sources") or [f"src{i}" for i in range(len(upstreams))]
+    names = opts.pop("sources", None) or [f"src{i}" for i in range(len(upstreams))]
     if len(names) != len(upstreams):
         raise ValueError(
             f"RRFFuse: {len(upstreams)} upstream(s) but {len(names)} source name(s)"
         )
-    return rrf_fuse(
-        dict(zip(names, upstreams)),
-        k=int(opts.get("k", 10)),
-        c=int(opts.get("c", 60)),
-        id_col=opts.get("id_column", "doc_id"),
-    )
+    _rename(opts, id_column="id_col")
+    return _bind(rrf_fuse, "RRFFuse", spark, upstreams, opts, dict(zip(names, upstreams)))
 
 
 @node_class("SQLExecute")
@@ -599,11 +479,16 @@ def _sql_execute(spark, upstreams, opts):
 @node_class("FunctionOfMessage")
 def _fn_of_message(spark, upstreams, opts):
     """node.py:996-1013 — named function applied per record; compiled to a
-    typed UDF column rather than a whole-row Python pass."""
+    typed UDF column (``wrap_udf``'s ``return_type`` / ``mode``) rather
+    than a whole-row Python pass.  ``function`` is the dotted path,
+    ``key`` the input column (default: every column), ``output_key``
+    the result column (default ``result``)."""
     df = _one(upstreams, "FunctionOfMessage")
-    fn = wrap_udf(opts["function"], opts.get("return_type", "string"), mode=opts.get("mode", "pandas"))
-    cols = [opts["key"]] if "key" in opts else df.columns
-    return df.withColumn(opts.get("output_key", "result"), fn(*cols))
+    cols = [opts.pop("key")] if "key" in opts else df.columns
+    out = opts.pop("output_key", "result")
+    target = opts.pop("function")
+    fn = _bind(wrap_udf, "FunctionOfMessage", spark, upstreams, opts, target)
+    return df.withColumn(out, fn(*cols))
 
 
 # -- streaming sources ------------------------------------------------------
@@ -612,58 +497,30 @@ def _fn_of_message(spark, upstreams, opts):
 @node_class("LocalDirectoryWatchdog")
 def _watchdog(spark, upstreams, opts):
     """node.py:1500-1525 — directory poller as the Structured Streaming
-    file source (checkpointed discovery instead of mtime polling)."""
+    file source (checkpointed discovery instead of mtime polling).  YAML
+    spells ``fmt`` as ``format``."""
     from metalpipe_spark.streaming.streams import file_watchdog
 
-    return file_watchdog(
-        spark,
-        opts["directory"],
-        opts["schema"],
-        fmt=opts.get("format", "parquet"),
-        max_files_per_trigger=opts.get("max_files_per_trigger"),
-    )
-
-
-@node_class("WETStream")
-def _wet_stream(spark, upstreams, opts):
-    """Continuously-arriving WET crawl segments as a stream
-    (sources/warc.py:stream_wet) — chain the streaming corpus pipeline
-    behind it."""
-    from metalpipe_spark.sources.warc import stream_wet
-
-    types = opts.get("record_types", ["conversion"])
-    return stream_wet(
-        spark,
-        opts["directory"],
-        warc_version=str(opts.get("warc_version", "1.0")),
-        record_types=tuple(types) if types is not None else None,
-        glob=opts.get("glob", "*.gz"),
-        max_files_per_trigger=opts.get("max_files_per_trigger"),
-    )
+    _rename(opts, format="fmt")
+    return _bind(file_watchdog, "LocalDirectoryWatchdog", spark, upstreams, opts)
 
 
 @node_class("TimeWindowAccumulator")
 def _time_window(spark, upstreams, opts):
     """node.py:1453-1460 (stub in the reference) — tumbling event-time
-    window with configurable aggregates."""
-    from pyspark.sql import functions as FF
-
+    window.  YAML spells ``window_size`` as ``window`` and gives the
+    aggregates as ``aggregates: [{fn, column, alias}]`` (default: one
+    row count ``n``)."""
     from metalpipe_spark.streaming.streams import tumbling_window
 
-    df = _one(upstreams, "TimeWindowAccumulator")
     aggs = []
-    for spec in opts.get("aggregates", [{"fn": "count", "column": "*", "alias": "n"}]):
-        fn = getattr(FF, spec["fn"])
-        col = FF.lit(1) if spec.get("column", "*") == "*" else FF.col(spec["column"])
+    for spec in opts.pop("aggregates", [{"fn": "count", "column": "*", "alias": "n"}]):
+        fn = getattr(F, spec["fn"])
+        col = F.lit(1) if spec.get("column", "*") == "*" else F.col(spec["column"])
         aggs.append(fn(col).alias(spec.get("alias", spec["fn"])))
-    return tumbling_window(
-        df,
-        opts["ts_col"],
-        opts["window"],
-        aggs,
-        watermark=opts.get("watermark", "30 seconds"),
-        group_by=opts.get("group_by"),
-    )
+    opts["aggs"] = aggs
+    _rename(opts, window="window_size")
+    return _bind(tumbling_window, "TimeWindowAccumulator", spark, upstreams, opts)
 
 
 @node_class("StreamingJoin")
@@ -674,17 +531,7 @@ def _streaming_join(spark, upstreams, opts):
 
     if len(upstreams) != 2:
         raise ValueError("StreamingJoin requires exactly two upstream nodes")
-    left, right = upstreams
-    return streaming_join(
-        left,
-        right,
-        on=opts["on"],
-        left_ts=opts["left_ts"],
-        right_ts=opts["right_ts"],
-        window=opts.get("window", "30 seconds"),
-        watermark=opts.get("watermark", "30 seconds"),
-        how=opts.get("how", "inner"),
-    )
+    return _bind(streaming_join, "StreamingJoin", spark, upstreams, opts, *upstreams)
 
 
 # -- sinks ------------------------------------------------------------------
@@ -717,114 +564,118 @@ def _blocker(spark, upstreams, opts):
     return df.limit(0)
 
 
+@node_class("TrainingShardWriter")
+def _training_shard_writer_node(spark, upstreams, opts):
+    """Write ``write_training_shards`` output at compile and forward the
+    upstream unchanged."""
+    from metalpipe_spark.sinks.writers import write_training_shards
+
+    df = _one(upstreams, "TrainingShardWriter")
+    _bind(write_training_shards, "TrainingShardWriter", spark, upstreams, opts, df)
+    return df
+
+
+@node_class("ParquetWriter")
+def _parquet_writer(spark, upstreams, opts):
+    df = _one(upstreams, "ParquetWriter")
+    writer = df.write.mode(opts.get("mode", "overwrite"))
+    if "partition_by" in opts:
+        writer = writer.partitionBy(*opts["partition_by"])
+    writer.parquet(opts["path"])
+    return df
+
+
+@node_class("WETWriter")
+def _wet_writer(spark, upstreams, opts):
+    """Export (url, text) rows as spec-framed .wet.gz shards
+    (sources/warc.py:write_wet) — the interchange format every other
+    Common Crawl consumer reads — and forward the upstream unchanged."""
+    from metalpipe_spark.sources.warc import write_wet
+
+    df = _one(upstreams, "WETWriter")
+    _bind(write_wet, "WETWriter", spark, upstreams, opts, df)
+    return df
+
+
 # -- training-data curation nodes (beyond the reference; COVERAGE.md) -------
-
-
-@node_class("ScrubPII")
-def _scrub_pii(spark, upstreams, opts):
-    from metalpipe_spark.operators.text import scrub_pii
-
-    return scrub_pii(
-        _one(upstreams, "ScrubPII"),
-        text_col=opts.get("text_col", "text"),
-        out_col=opts.get("out_col"),
-    )
 
 
 @node_class("DetectLanguage")
 def _detect_language(spark, upstreams, opts):
+    """Heuristic language tag of ``text_col`` (default ``text``) into
+    ``output_col`` (default ``lang_detected``)."""
     from metalpipe_spark.operators.text import detect_language
 
     df = _one(upstreams, "DetectLanguage")
+    out = opts.pop("output_col", "lang_detected")
+    text = opts.pop("text_col", "text")
     return df.withColumn(
-        opts.get("output_col", "lang_detected"),
-        detect_language(opts.get("text_col", "text")),
+        out, _bind(detect_language, "DetectLanguage", spark, upstreams, opts, text)
     )
 
 
 @node_class("DetectLanguageModel")
 def _detect_language_model_node(spark, upstreams, opts):
-    """Trained hashed-softmax language ID (pinned weights by default;
-    pass classes/weights/biases to serve a custom model)."""
+    """Trained hashed-softmax language ID of ``text_key`` (default
+    ``text``) into ``output_key`` (default ``lang_pred``); pinned
+    weights by default, pass classes/weights/biases to serve a custom
+    model."""
     from metalpipe_spark.operators.langid import detect_language_model
 
     df = _one(upstreams, "DetectLanguageModel")
+    out = opts.pop("output_key", "lang_pred")
+    text = opts.pop("text_key", "text")
     return df.withColumn(
-        opts.get("output_key", "lang_pred"),
-        detect_language_model(
-            opts.get("text_key", "text"),
-            classes=opts.get("classes"),
-            weights=opts.get("weights"),
-            biases=opts.get("biases"),
-            script_weights=opts.get("script_weights"),
-        ),
+        out, _bind(detect_language_model, "DetectLanguageModel", spark, upstreams, opts, text)
     )
 
 
 @node_class("QualityScore")
 def _quality_score(spark, upstreams, opts):
+    """Quality score of ``text_col`` (default ``text``) into
+    ``output_col`` (default ``quality``)."""
     from metalpipe_spark.operators.text import quality_score
 
     df = _one(upstreams, "QualityScore")
-    return df.withColumn(
-        opts.get("output_col", "quality"),
-        quality_score(opts.get("text_col", "text")),
-    )
+    out = opts.pop("output_col", "quality")
+    text = opts.pop("text_col", "text")
+    return df.withColumn(out, _bind(quality_score, "QualityScore", spark, upstreams, opts, text))
 
 
 @node_class("ExactDedup")
 def _exact_dedup_node(spark, upstreams, opts):
     """Keep the full rows of the canonical (lowest-id) document per
-    normalized-text fingerprint (left_semi against the keeper set)."""
+    normalized-text fingerprint (left_semi against the keeper ids)."""
     from metalpipe_spark.operators.dedup import exact_dedup
 
     df = _one(upstreams, "ExactDedup")
-    id_col = opts.get("id_col", "doc_id")
-    keep = exact_dedup(df, opts.get("text_col", "text"), id_col)
-    return df.join(keep, id_col, "left_semi")
+    keep = _bind(exact_dedup, "ExactDedup", spark, upstreams, opts, df)
+    return df.join(keep, keep.columns, "left_semi")
 
 
 @node_class("NearDupDedup")
 def _near_dup_dedup_node(spark, upstreams, opts):
+    """MinHash-LSH pairs cut at ``est_jaccard >= threshold`` (default
+    0.5), then connected-component dedup (``dedup_corpus``, which takes
+    ``checkpoint_dir``).  YAML defaults ``bands`` to 8 (minhash_lsh_pairs
+    defaults 4); ``auto_bands: true`` hands ``threshold`` to the
+    S-curve tuner (tune_lsh_bands) so the banding is sized for the SAME
+    cut.  ``hash: xxhash64`` is the production knob (1.3-1.4x measured
+    on the minhash family); md5 stays the portable default."""
     from metalpipe_spark.operators.dedup import dedup_corpus, minhash_lsh_pairs
 
     df = _one(upstreams, "NearDupDedup")
-    threshold = opts.get("threshold", 0.5)
-    pairs = minhash_lsh_pairs(
-        df,
-        text_col=opts.get("text_col", "text"),
-        id_col=opts.get("id_col", "doc_id"),
-        num_hashes=opts.get("num_hashes", 16),
-        bands=opts.get("bands", 8),
-        # auto_bands: let the S-curve tuner size the banding for the
-        # SAME threshold the est_jaccard cut uses (tune_lsh_bands)
-        threshold=threshold if opts.get("auto_bands") else None,
-        # hash: xxhash64 is the production knob (1.3-1.4x measured on
-        # the minhash family); md5 stays the portable default.
-        hash=opts.get("hash", "md5"),
-    ).where(F.col("est_jaccard") >= threshold)
+    threshold = opts.pop("threshold", 0.5)
+    if opts.pop("auto_bands", False):
+        opts["threshold"] = threshold
+    checkpoint_dir = opts.pop("checkpoint_dir", None)
+    opts.setdefault("bands", 8)
+    pairs = _bind(minhash_lsh_pairs, "NearDupDedup", spark, upstreams, opts, df)
     return dedup_corpus(
         df,
-        pairs,
-        id_col=opts.get("id_col", "doc_id"),
-        checkpoint_dir=opts.get("checkpoint_dir"),
-    )
-
-
-@node_class("ExactSubstrDedup")
-def _exact_substr_dedup_node(spark, upstreams, opts):
-    """Exact duplicated-substring removal (Lee et al. 2022 ExactSubstr
-    semantics): operators/dedup.exact_substr_dedup."""
-    from metalpipe_spark.operators.dedup import exact_substr_dedup
-
-    df = _one(upstreams, "ExactSubstrDedup")
-    return exact_substr_dedup(
-        df,
-        text_col=opts.get("text_col", "text"),
-        id_col=opts.get("id_col", "doc_id"),
-        min_length=opts.get("min_length", 32),
-        hash=opts.get("hash", "md5"),
-        verify=opts.get("verify", True),
+        pairs.where(F.col("est_jaccard") >= threshold),
+        id_col=_default(minhash_lsh_pairs, opts, "id_col"),
+        checkpoint_dir=checkpoint_dir,
     )
 
 
@@ -842,104 +693,30 @@ def _incremental_exact_substr_node(spark, upstreams, opts):
             "IncrementalExactSubstr takes [batch] or [batch, store]"
             " upstreams"
         )
-    clean, store = incremental_exact_substr(
-        upstreams[0],
-        upstreams[1] if len(upstreams) == 2 else None,
-        text_col=opts.get("text_col", "text"),
-        id_col=opts.get("id_col", "doc_id"),
-        min_length=opts.get("min_length", 32),
-        hash=opts.get("hash", "md5"),
+    store_view = opts.pop("store_view", None)
+    clean, store = _bind(
+        incremental_exact_substr, "IncrementalExactSubstr", spark, upstreams, opts,
+        upstreams[0], upstreams[1] if len(upstreams) == 2 else None,
     )
-    if opts.get("store_view"):
-        store.createOrReplaceTempView(opts["store_view"])
+    if store_view:
+        store.createOrReplaceTempView(store_view)
     return clean
-
-
-@node_class("ChunkDocuments")
-def _chunk_documents_node(spark, upstreams, opts):
-    from metalpipe_spark.operators.text import chunk_documents
-
-    return chunk_documents(
-        _one(upstreams, "ChunkDocuments"),
-        text_col=opts.get("text_col", "text"),
-        id_col=opts.get("id_col", "doc_id"),
-        chunk_tokens=opts.get("chunk_tokens", 64),
-        overlap=opts.get("overlap", 16),
-    )
-
-
-@node_class("StratifiedSample")
-def _stratified_sample_node(spark, upstreams, opts):
-    from metalpipe_spark.operators.curation import stratified_sample
-
-    return stratified_sample(
-        _one(upstreams, "StratifiedSample"),
-        strata_col=opts["strata_col"],
-        fractions=opts["fractions"],
-        key_col=opts["key_col"],
-        default_fraction=opts.get("default_fraction", 0.0),
-    )
-
-
-@node_class("TopKPerGroup")
-def _topk_per_group_node(spark, upstreams, opts):
-    from metalpipe_spark.operators.curation import topk_per_group
-
-    return topk_per_group(
-        _one(upstreams, "TopKPerGroup"),
-        group_col=opts["group_col"],
-        order_col=opts["order_col"],
-        k=opts["k"],
-        tie_col=opts.get("tie_col"),
-        descending=opts.get("descending", True),
-    )
 
 
 @node_class("QualityFilter")
 def _quality_filter_node(spark, upstreams, opts):
-    """Gopher-style composite filter; ``keep_only=True`` (default) drops
-    failing docs, else annotates with keep/drop_reason."""
+    """Gopher-style composite filter; ``keep_only: true`` (default)
+    drops failing docs, else annotates with keep/drop_reason."""
     from metalpipe_spark.operators.text import quality_filter
 
     df = _one(upstreams, "QualityFilter")
-    id_col = opts.get("id_col", "doc_id")
-    verdicts = quality_filter(df, opts.get("text_col", "text"), id_col)
-    if opts.get("keep_only", True):
+    keep_only = opts.pop("keep_only", True)
+    verdicts = _bind(quality_filter, "QualityFilter", spark, upstreams, opts, df)
+    id_col = _default(quality_filter, opts, "id_col")
+    if keep_only:
         keepers = verdicts.where(F.col("keep")).select(id_col)
         return df.join(keepers, id_col, "left_semi")
     return df.join(verdicts, id_col)
-
-
-@node_class("ParagraphDedup")
-def _paragraph_dedup_node(spark, upstreams, opts):
-    from metalpipe_spark.operators.dedup import chunk_level_dedup
-
-    return chunk_level_dedup(
-        _one(upstreams, "ParagraphDedup"),
-        text_col=opts.get("text_col", "text"),
-        id_col=opts.get("id_col", "doc_id"),
-        chunk_tokens=opts.get("chunk_tokens", 32),
-    )
-
-
-@node_class("EmbedDocuments")
-def _embed_documents_node(spark, upstreams, opts):
-    """Batched embedding inference (operators/inference.py): appends
-    ``output_col`` = model(text_col) via mapInPandas with executor-side
-    model caching.  ``model`` is a spec string — the built-in
-    deterministic fixture is ``hashed-projection:{dim}[:{salt}]``; real
-    encoders plug in via register_embedding_model."""
-    from metalpipe_spark.operators.inference import embed_documents
-
-    df = _one(upstreams, "EmbedDocuments")
-    return embed_documents(
-        df,
-        text_col=opts.get("text_col", "text"),
-        model=opts.get("model", "hashed-projection:64"),
-        output_col=opts.get("output_col", "embedding"),
-        batch_size=opts.get("batch_size", 256),
-        max_concurrent=opts.get("max_concurrent"),
-    )
 
 
 @node_class("IncrementalEmbed")
@@ -954,19 +731,13 @@ def _incremental_embed_node(spark, upstreams, opts):
         raise ValueError(
             "IncrementalEmbed takes [batch] or [batch, store] upstreams"
         )
-    batch = upstreams[0]
-    store = upstreams[1] if len(upstreams) == 2 else None
-    fresh, updated = incremental_embed(
-        batch,
-        store,
-        text_col=opts.get("text_col", "text"),
-        id_col=opts.get("id_col", "doc_id"),
-        model=opts.get("model", "hashed-projection:64"),
-        batch_size=opts.get("batch_size", 256),
-        max_concurrent=opts.get("max_concurrent"),
+    fresh_view = opts.pop("fresh_view", None)
+    fresh, updated = _bind(
+        incremental_embed, "IncrementalEmbed", spark, upstreams, opts,
+        upstreams[0], upstreams[1] if len(upstreams) == 2 else None,
     )
-    if opts.get("fresh_view"):
-        fresh.createOrReplaceTempView(opts["fresh_view"])
+    if fresh_view:
+        fresh.createOrReplaceTempView(fresh_view)
     return updated
 
 
@@ -984,75 +755,31 @@ def _decontaminate_node(spark, upstreams, opts):
     apply to it.  The exact method hashes nothing (raw shingle join),
     so ``hash`` with ``method: exact`` is rejected rather than
     ignored."""
-    method = opts.get("method", "exact")
+    from metalpipe_spark.operators.dedup import decontaminate
+    from metalpipe_spark.operators.sketches import bloom_decontaminate
+
+    method = opts.pop("method", "exact")
+    report_view = opts.pop("report_view", None)
     if len(upstreams) != 2:
         raise ValueError("Decontaminate requires [corpus, benchmark] upstreams")
-    corpus, benchmark = upstreams
     if method == "bloom":
-        from metalpipe_spark.operators.sketches import bloom_decontaminate
-
-        clean, report = bloom_decontaminate(
-            corpus,
-            benchmark,
-            text_col=opts.get("text_col", "text"),
-            id_col=opts.get("id_col", "doc_id"),
-            n=opts.get("n", 3),
-            m_bits=opts.get("m_bits", 1 << 18),
-            k=opts.get("k", 4),
-            min_hits=opts.get("min_hits", 3),
-            hash=opts.get("hash", "md5"),
-        )
+        fn = bloom_decontaminate
     elif method == "exact":
-        from metalpipe_spark.operators.dedup import decontaminate
-
         if "hash" in opts:
             raise ValueError(
                 "Decontaminate(method=exact) joins raw shingles and "
                 "hashes nothing — the hash option only applies to "
                 "method: bloom"
             )
-        clean, report = decontaminate(
-            corpus,
-            benchmark,
-            text_col=opts.get("text_col", "text"),
-            id_col=opts.get("id_col", "doc_id"),
-            n=opts.get("n", 3),
-            min_shared=opts.get("min_shared", 3),
-        )
+        fn = decontaminate
     else:
         raise ValueError(
             f"Decontaminate method must be 'exact' or 'bloom', got {method!r}"
         )
-    if opts.get("report_view"):
-        report.createOrReplaceTempView(opts["report_view"])
+    clean, report = _bind(fn, "Decontaminate", spark, upstreams, opts, *upstreams)
+    if report_view:
+        report.createOrReplaceTempView(report_view)
     return clean
-
-
-@node_class("PackShards")
-def _pack_shards_node(spark, upstreams, opts):
-    from metalpipe_spark.operators.curation import pack_shards
-
-    return pack_shards(
-        _one(upstreams, "PackShards"),
-        weight_col=opts["weight_col"],
-        order_col=opts["order_col"],
-        shard_budget=opts["shard_budget"],
-    )
-
-
-@node_class("BoilerplateRemoval")
-def _boilerplate_removal_node(spark, upstreams, opts):
-    """Strip every occurrence of a chunk appearing in >= min_df distinct
-    docs (catalog row q_boilerplate_removal)."""
-    from metalpipe_spark.operators.dedup import boilerplate_chunk_removal
-
-    return boilerplate_chunk_removal(
-        _one(upstreams, "BoilerplateRemoval"),
-        text_col=opts.get("text_col", "text"),
-        id_col=opts.get("id_col", "doc_id"),
-        chunk_tokens=opts.get("chunk_tokens", 32),
-        min_df=opts.get("min_df", 3),
-    )
 
 
 @node_class("KeepBestDedup")
@@ -1063,21 +790,15 @@ def _keep_best_dedup_node(spark, upstreams, opts):
 
     if len(upstreams) != 2:
         raise ValueError("KeepBestDedup requires [docs, assignments] upstreams")
-    docs, assignments = upstreams
-    return dedup_corpus_keep_best(
-        docs,
-        assignments,
-        score_col=opts["score_col"],
-        id_col=opts.get("id_col", "doc_id"),
-        cluster_col=opts.get("cluster_col", "cluster_id"),
-    )
+    return _bind(dedup_corpus_keep_best, "KeepBestDedup", spark, upstreams, opts, *upstreams)
 
 
 @node_class("VocabCoverage")
 def _vocab_coverage_node(spark, upstreams, opts):
     """Per-document OOV stats against the corpus top-k vocabulary
     (q_vocab_coverage); one upstream = self-vocabulary, two = probe the
-    first against a vocabulary built from the second."""
+    first against a vocabulary built from the second.  ``vocab_size``
+    goes to build_vocabulary, ``text_col`` to both operators."""
     from metalpipe_spark.operators.text import build_vocabulary, oov_rate
 
     if len(upstreams) == 1:
@@ -1086,17 +807,10 @@ def _vocab_coverage_node(spark, upstreams, opts):
         docs, vocab_src = upstreams
     else:
         raise ValueError("VocabCoverage takes [docs] or [docs, vocab_corpus]")
-    vocab = build_vocabulary(
-        vocab_src,
-        text_col=opts.get("text_col", "text"),
-        vocab_size=int(opts.get("vocab_size", 50_000)),
-    )
-    return oov_rate(
-        docs,
-        vocab,
-        text_col=opts.get("text_col", "text"),
-        id_col=opts.get("id_col", "doc_id"),
-    )
+    vocab_opts = {k: opts.pop(k) for k in ("vocab_size",) if k in opts}
+    vocab_opts["text_col"] = _default(oov_rate, opts, "text_col")
+    vocab = _bind(build_vocabulary, "VocabCoverage", spark, upstreams, vocab_opts, vocab_src)
+    return _bind(oov_rate, "VocabCoverage", spark, upstreams, opts, docs, vocab)
 
 
 @node_class("LeakageFreeSplit")
@@ -1108,167 +822,84 @@ def _leakage_free_split_node(spark, upstreams, opts):
 
     if len(upstreams) != 2:
         raise ValueError("LeakageFreeSplit requires [docs, assignments] upstreams")
-    docs, assignments = upstreams
-    return leakage_free_split(
-        docs,
-        assignments,
-        fractions=opts["fractions"],
-        id_col=opts.get("id_col", "doc_id"),
-        cluster_col=opts.get("cluster_col", "cluster_id"),
-        split_col=opts.get("split_col", "split"),
-        salt=opts.get("salt", ""),
-    )
-
-
-@node_class("TokenBudgetSample")
-def _token_budget_sample_node(spark, upstreams, opts):
-    """Document-atomic token-budget cut in order_col order
-    (q_token_budget_sample)."""
-    from metalpipe_spark.operators.curation import token_budget_sample
-
-    return token_budget_sample(
-        _one(upstreams, "TokenBudgetSample"),
-        weight_col=opts["weight_col"],
-        order_col=opts["order_col"],
-        budget=opts["budget"],
-    )
-
-
-@node_class("PivotPinned")
-def _pivot_pinned_node(spark, upstreams, opts):
-    """Pivot with pinned values as ONE conditional aggregate — never
-    the double-aggregate .pivot() plan (q_pivot_orders)."""
-    from metalpipe_spark.operators.aggregate import pivot_pinned
-
-    return pivot_pinned(
-        _one(upstreams, "PivotPinned"),
-        group_cols=opts["group_cols"],
-        pivot_col=opts["pivot_col"],
-        values=opts["values"],
-        agg_col=opts["agg_col"],
-        agg=opts.get("agg", "sum"),
-        out_names=opts.get("out_names"),
-    )
-
-
-@node_class("NormalizedDedup")
-def _normalized_dedup_node(spark, upstreams, opts):
-    """Exact dedup over CCNet-normalized text: min-id survivor per
-    normalized fingerprint (catalog row q_normalized_dedup)."""
-    from metalpipe_spark.operators.text import normalized_dedup
-
-    return normalized_dedup(
-        _one(upstreams, "NormalizedDedup"),
-        text_col=opts.get("text_col", "text"),
-        id_col=opts.get("id_col", "doc_id"),
-    )
+    return _bind(leakage_free_split, "LeakageFreeSplit", spark, upstreams, opts, *upstreams)
 
 
 @node_class("ExtractHost")
 def _extract_host_node(spark, upstreams, opts):
-    """Append the lower-cased (www-folded) host of a URL column."""
+    """Append the lower-cased (www-folded) host of the URL column
+    ``url_key`` (default ``url``) as ``output_key`` (default ``host``)."""
     from metalpipe_spark.operators.web import extract_host
 
     df = _one(upstreams, "ExtractHost")
-    return df.withColumn(
-        opts.get("output_key", "host"),
-        extract_host(
-            opts.get("url_key", "url"), strip_www=opts.get("strip_www", True)
-        ),
-    )
+    out = opts.pop("output_key", "host")
+    url = opts.pop("url_key", "url")
+    return df.withColumn(out, _bind(extract_host, "ExtractHost", spark, upstreams, opts, url))
 
 
 @node_class("URLNormalize")
 def _url_normalize_node(spark, upstreams, opts):
-    """Append (or replace with) the canonical form of a URL column."""
+    """Append (or replace with) the canonical form of the URL column
+    ``url_key`` (default ``url``) as ``output_key`` (default
+    ``url_norm``)."""
     from metalpipe_spark.operators.web import url_normalize
 
     df = _one(upstreams, "URLNormalize")
-    url_key = opts.get("url_key", "url")
-    return df.withColumn(
-        opts.get("output_key", "url_norm"),
-        url_normalize(url_key, strip_www=opts.get("strip_www", True)),
-    )
+    out = opts.pop("output_key", "url_norm")
+    url = opts.pop("url_key", "url")
+    return df.withColumn(out, _bind(url_normalize, "URLNormalize", spark, upstreams, opts, url))
 
 
 @node_class("DomainStats")
 def _domain_stats_node(spark, upstreams, opts):
-    """Per-domain aggregates (host, n_docs, n_urls[, total_size])."""
+    """Per-domain aggregates (host, n_docs, n_urls[, total_size]).  YAML
+    spells ``url_col`` / ``size_col`` as ``url_key`` / ``size_key``."""
     from metalpipe_spark.operators.web import domain_stats
 
-    return domain_stats(
-        _one(upstreams, "DomainStats"),
-        url_col=opts.get("url_key", "url"),
-        size_col=opts.get("size_key"),
-        strip_www=opts.get("strip_www", True),
-    )
+    _rename(opts, url_key="url_col", size_key="size_col")
+    return _bind(domain_stats, "DomainStats", spark, upstreams, opts)
 
 
 @node_class("HostFilter")
 def _host_filter_node(spark, upstreams, opts):
-    """Allow/block-list host filtering (lists inline as plan literals)."""
+    """Allow/block-list host filtering (lists inline as plan literals).
+    YAML spells ``url_col`` as ``url_key``."""
     from metalpipe_spark.operators.web import host_filter
 
-    return host_filter(
-        _one(upstreams, "HostFilter"),
-        url_col=opts.get("url_key", "url"),
-        allowlist=opts.get("allowlist"),
-        blacklist=opts.get("blacklist"),
-        strip_www=opts.get("strip_www", True),
-    )
+    _rename(opts, url_key="url_col")
+    return _bind(host_filter, "HostFilter", spark, upstreams, opts)
 
 
 @node_class("URLDedup")
 def _url_dedup_node(spark, upstreams, opts):
-    """Min-id survivor per canonical URL (url_normalize key)."""
+    """Min-id survivor per canonical URL (url_normalize key).  YAML
+    spells ``url_col`` / ``id_col`` as ``url_key`` / ``id_key``."""
     from metalpipe_spark.operators.web import url_dedup
 
-    return url_dedup(
-        _one(upstreams, "URLDedup"),
-        url_col=opts.get("url_key", "url"),
-        id_col=opts.get("id_key", "doc_id"),
-        strip_www=opts.get("strip_www", True),
-    )
-
-
-@node_class("HostRank")
-def _host_rank_node(spark, upstreams, opts):
-    """PageRank over a host-link graph (operators/web.py:host_rank) —
-    upstream rows are edges (src/dst host columns); set
-    ``fixed_point_scale`` for bit-reproducible ranks."""
-    from metalpipe_spark.operators.web import host_rank
-
-    return host_rank(
-        _one(upstreams, "HostRank"),
-        src=opts.get("src", "src_host"),
-        dst=opts.get("dst", "dst_host"),
-        damping=opts.get("damping", 0.85),
-        iterations=opts.get("iterations", 3),
-        fixed_point_scale=opts.get("fixed_point_scale"),
-    )
+    _rename(opts, url_key="url_col", id_key="id_col")
+    return _bind(url_dedup, "URLDedup", spark, upstreams, opts)
 
 
 @node_class("TrainBPE")
 def _train_bpe_node(spark, upstreams, opts):
     """Learn a BPE merge table from the upstream corpus
-    (operators/bpe.py:train_bpe)."""
+    (operators/bpe.py:train_bpe).  YAML spells ``text_col`` as
+    ``text_column``."""
     from metalpipe_spark.operators.bpe import train_bpe
 
-    return train_bpe(
-        _one(upstreams, "TrainBPE"),
-        text_col=opts.get("text_column", "text"),
-        num_merges=opts.get("num_merges", 100),
-        min_pair_count=opts.get("min_pair_count", 2),
-    )
+    _rename(opts, text_column="text_col")
+    return _bind(train_bpe, "TrainBPE", spark, upstreams, opts)
 
 
 @node_class("BPEEncode")
 def _bpe_encode_node(spark, upstreams, opts):
     """Encode the corpus with a merge table: either ``merges`` inline
-    ([[left, right], ...]) or a second upstream (TrainBPE output)."""
+    ([[left, right], ...]) or a second upstream (TrainBPE output).  YAML
+    spells ``text_col`` / ``id_col`` as ``text_column`` /
+    ``id_column``."""
     from metalpipe_spark.operators.bpe import bpe_encode
 
-    merges = opts.get("merges")
+    merges = opts.pop("merges", None)
     if merges is not None:
         corpus = _one(upstreams, "BPEEncode")
         merges = [tuple(m) for m in merges]
@@ -1283,36 +914,29 @@ def _bpe_encode_node(spark, upstreams, opts):
             raise ValueError("BPEEncode: exactly one upstream must be a merge table")
         merges = tables[0]
         corpus = next(u for u in upstreams if u is not merges)
-    return bpe_encode(
-        corpus,
-        merges,
-        text_col=opts.get("text_column", "text"),
-        id_col=opts.get("id_column", "doc_id"),
-    )
+    _rename(opts, text_column="text_col", id_column="id_col")
+    return _bind(bpe_encode, "BPEEncode", spark, upstreams, opts, corpus, merges)
 
 
 @node_class("TrainUnigram")
 def _train_unigram_node(spark, upstreams, opts):
     """Learn a unigram (SentencePiece-family) piece table
-    (operators/unigram.py:train_unigram)."""
+    (operators/unigram.py:train_unigram).  YAML spells ``text_col`` as
+    ``text_column``."""
     from metalpipe_spark.operators.unigram import train_unigram
 
-    return train_unigram(
-        _one(upstreams, "TrainUnigram"),
-        text_col=opts.get("text_column", "text"),
-        vocab_size=opts.get("vocab_size", 200),
-        max_piece_len=opts.get("max_piece_len", 6),
-        em_iters=opts.get("em_iters", 2),
-    )
+    _rename(opts, text_column="text_col")
+    return _bind(train_unigram, "TrainUnigram", spark, upstreams, opts)
 
 
 @node_class("UnigramEncode")
 def _unigram_encode_node(spark, upstreams, opts):
     """Viterbi-encode the corpus: ``pieces`` inline ({piece: logprob})
-    or a second upstream (TrainUnigram output)."""
+    or a second upstream (TrainUnigram output).  YAML spells
+    ``text_col`` / ``id_col`` as ``text_column`` / ``id_column``."""
     from metalpipe_spark.operators.unigram import unigram_encode
 
-    pieces = opts.get("pieces")
+    pieces = opts.pop("pieces", None)
     if pieces is not None:
         corpus = _one(upstreams, "UnigramEncode")
     else:
@@ -1326,39 +950,34 @@ def _unigram_encode_node(spark, upstreams, opts):
             raise ValueError("UnigramEncode: exactly one upstream must be a piece table")
         pieces = tables[0]
         corpus = next(u for u in upstreams if u is not pieces)
-    return unigram_encode(
-        corpus,
-        pieces,
-        text_col=opts.get("text_column", "text"),
-        id_col=opts.get("id_column", "doc_id"),
-    )
+    _rename(opts, text_column="text_col", id_column="id_col")
+    return _bind(unigram_encode, "UnigramEncode", spark, upstreams, opts, corpus, pieces)
 
 
 @node_class("ParseRobots")
 def _parse_robots_node(spark, upstreams, opts):
     """robots.txt bodies -> RFC 9309 rule table for one user-agent
-    (operators/web.py:parse_robots); upstream rows carry host + body."""
+    (operators/web.py:parse_robots); upstream rows carry host + body.
+    YAML spells ``host_col`` / ``body_col`` as ``host_key`` /
+    ``body_key``."""
     from metalpipe_spark.operators.web import parse_robots
 
-    return parse_robots(
-        _one(upstreams, "ParseRobots"),
-        host_col=opts.get("host_key", "host"),
-        body_col=opts.get("body_key", "body"),
-        agent=opts.get("agent", "*"),
-    )
+    _rename(opts, host_key="host_col", body_key="body_col")
+    return _bind(parse_robots, "ParseRobots", spark, upstreams, opts)
 
 
 @node_class("ParseSitemap")
 def _parse_sitemap_node(spark, upstreams, opts):
     """sitemap.xml bodies -> frontier rows (kind/url/lastmod), urlset
-    and sitemapindex both handled (operators/web.py:parse_sitemap)."""
+    and sitemapindex both handled (operators/web.py:parse_sitemap);
+    ``urls_only: true`` keeps the url rows.  YAML spells ``body_col`` as
+    ``body_key``."""
     from metalpipe_spark.operators.web import parse_sitemap
 
-    out = parse_sitemap(
-        _one(upstreams, "ParseSitemap"),
-        body_col=opts.get("body_key", "body"),
-    )
-    if opts.get("urls_only"):
+    urls_only = opts.pop("urls_only", False)
+    _rename(opts, body_key="body_col")
+    out = _bind(parse_sitemap, "ParseSitemap", spark, upstreams, opts)
+    if urls_only:
         out = out.where(F.col("kind") == "url")
     return out
 
@@ -1368,7 +987,7 @@ def _robots_filter_node(spark, upstreams, opts):
     """Crawl-politeness filter: first upstream is the URL frontier,
     second the ParseRobots rule table (broadcast; the frontier never
     shuffles).  ``keep: all`` annotates with crawl_allowed instead of
-    filtering."""
+    filtering.  YAML spells ``url_col`` as ``url_key``."""
     from metalpipe_spark.operators.web import robots_filter
 
     if len(upstreams) != 2:
@@ -1389,48 +1008,30 @@ def _robots_filter_node(spark, upstreams, opts):
             "RobotsFilter: exactly one upstream must be a ParseRobots "
             f"rule table (host/rule/prefix/wild/pattern); got {is_rules}"
         )
-    return robots_filter(
-        frontier,
-        rules,
-        url_col=opts.get("url_key", "url"),
-        keep=opts.get("keep", "allowed"),
-        strip_www=opts.get("strip_www", True),
-    )
+    _rename(opts, url_key="url_col")
+    return _bind(robots_filter, "RobotsFilter", spark, upstreams, opts, frontier, rules)
 
 
 @node_class("HistogramQuantiles")
 def _histogram_quantiles_node(spark, upstreams, opts):
     """Deterministic histogram-sketch quantiles per group
-    (operators/sketches.py:histogram_sketch_quantiles)."""
+    (operators/sketches.py:histogram_sketch_quantiles).  YAML spells
+    ``col`` / ``group_cols`` as ``column`` / ``group_by``."""
     from metalpipe_spark.operators.sketches import histogram_sketch_quantiles
 
-    return histogram_sketch_quantiles(
-        _one(upstreams, "HistogramQuantiles"),
-        opts["column"],
-        lo=opts["lo"],
-        hi=opts["hi"],
-        qs=tuple(opts.get("qs", (0.5, 0.9, 0.99))),
-        bins=opts.get("bins", 128),
-        group_cols=opts.get("group_by"),
-        scale=opts.get("scale", "linear"),
-    )
+    _rename(opts, column="col", group_by="group_cols")
+    return _bind(histogram_sketch_quantiles, "HistogramQuantiles", spark, upstreams, opts)
 
 
 @node_class("ModelQualityFilter")
 def _model_quality_filter_node(spark, upstreams, opts):
-    """Hashed-feature linear classifier filter; ``keep_only=True``
+    """Hashed-feature linear classifier filter; ``keep_only: true``
     (default) drops failing docs, else annotates logit/keep."""
     from metalpipe_spark.operators.text import model_quality_filter
 
-    df = _one(upstreams, "ModelQualityFilter")
-    out = model_quality_filter(
-        df,
-        weights=opts["weights"],
-        threshold=opts.get("threshold", 0.0),
-        text_col=opts.get("text_col", "text"),
-        bias=opts.get("bias", 0.0),
-    )
-    if opts.get("keep_only", True):
+    keep_only = opts.pop("keep_only", True)
+    out = _bind(model_quality_filter, "ModelQualityFilter", spark, upstreams, opts)
+    if keep_only:
         return out.where(F.col("keep")).drop("logit", "keep")
     return out
 
@@ -1443,16 +1044,7 @@ def _dsir_weights_node(spark, upstreams, opts):
 
     if len(upstreams) != 2:
         raise ValueError("DSIRWeights requires [corpus, target] upstreams")
-    corpus, target = upstreams
-    return dsir_importance_weights(
-        corpus,
-        target,
-        text_col=opts.get("text_col", "text"),
-        id_col=opts.get("id_col", "doc_id"),
-        buckets=opts.get("buckets", 8192),
-        smoothing=opts.get("smoothing", 1.0),
-        exact=opts.get("exact", False),
-    )
+    return _bind(dsir_importance_weights, "DSIRWeights", spark, upstreams, opts, *upstreams)
 
 
 @node_class("DSIRSample")
@@ -1463,87 +1055,7 @@ def _dsir_sample_node(spark, upstreams, opts):
 
     if len(upstreams) != 2:
         raise ValueError("DSIRSample requires [corpus, weights] upstreams")
-    corpus, weights = upstreams
-    return dsir_topk_sample(
-        corpus,
-        weights,
-        k=opts["k"],
-        id_col=opts.get("id_col", "doc_id"),
-        weight_col=opts.get("weight_col", "log_weight"),
-        temperature=opts.get("temperature"),
-        seed=opts.get("seed", 0),
-    )
-
-
-@node_class("CurriculumOrder")
-def _curriculum_order_node(spark, upstreams, opts):
-    """Quality/difficulty-banded training order
-    (operators/curation.py:curriculum_order)."""
-    from metalpipe_spark.operators.curation import curriculum_order
-
-    return curriculum_order(
-        _one(upstreams, "CurriculumOrder"),
-        score_col=opts["score_col"],
-        key_col=opts["key_col"],
-        n_buckets=int(opts.get("n_buckets", 4)),
-        seed=int(opts.get("seed", 0)),
-        ascending=opts.get("ascending", True),
-    )
-
-
-@node_class("TemperatureEpochs")
-def _temperature_epochs_node(spark, upstreams, opts):
-    """Uncapped temperature rebalance with epoch repeats
-    (operators/curation.py:temperature_resample_epochs)."""
-    from metalpipe_spark.operators.curation import temperature_resample_epochs
-
-    return temperature_resample_epochs(
-        _one(upstreams, "TemperatureEpochs"),
-        domain_col=opts["domain_col"],
-        key_col=opts["key_col"],
-        alpha=float(opts.get("alpha", 0.3)),
-        budget_frac=opts.get("budget_frac"),
-        budget_rows=opts.get("budget_rows"),
-        epoch_col=opts.get("epoch_col", "epoch"),
-    )
-
-
-@node_class("DomainMixSample")
-def _domain_mix_sample_node(spark, upstreams, opts):
-    from metalpipe_spark.operators.curation import domain_mix_sample
-
-    return domain_mix_sample(
-        _one(upstreams, "DomainMixSample"),
-        domain_col=opts["domain_col"],
-        key_col=opts["key_col"],
-        weights=opts["weights"],
-        budget_frac=opts.get("budget_frac"),
-        budget_rows=opts.get("budget_rows"),
-    )
-
-
-@node_class("SplitCorpus")
-def _split_corpus_node(spark, upstreams, opts):
-    from metalpipe_spark.operators.curation import split_corpus
-
-    return split_corpus(
-        _one(upstreams, "SplitCorpus"),
-        key_col=opts["key_col"],
-        fractions=opts["fractions"],
-        split_col=opts.get("split_col", "split"),
-        salt=opts.get("salt", ""),
-    )
-
-
-@node_class("GlobalShuffle")
-def _global_shuffle_node(spark, upstreams, opts):
-    from metalpipe_spark.operators.curation import global_shuffle
-
-    return global_shuffle(
-        _one(upstreams, "GlobalShuffle"),
-        key_col=opts["key_col"],
-        seed=opts.get("seed", 0),
-    )
+    return _bind(dsir_topk_sample, "DSIRSample", spark, upstreams, opts, *upstreams)
 
 
 @node_class("SemanticDedup")
@@ -1561,8 +1073,9 @@ def _semantic_dedup_node(spark, upstreams, opts):
     corpus, SCALING.md) — never point them at a real corpus.
 
     Fixed-centroid knobs: ``centroids`` inline, or
-    ``num_centroids``/``dim`` for the deterministic set; ``use_gemm``
-    (default true) picks the BLAS kernel."""
+    ``num_centroids``/``dim`` (default 8/64) for the deterministic set;
+    ``use_gemm`` (default true) picks the BLAS kernel
+    (semantic_dedup_gemm) over semantic_dedup."""
     from metalpipe_spark.operators.similarity import (
         deterministic_centroids,
         semantic_dedup,
@@ -1571,7 +1084,8 @@ def _semantic_dedup_node(spark, upstreams, opts):
     )
 
     df = _one(upstreams, "SemanticDedup")
-    if opts.get("scaled") is False and "target_cell_size" in opts:
+    scaled = opts.pop("scaled", None)
+    if scaled is False and "target_cell_size" in opts:
         # An EXPLICIT scaled: false alongside a scaled-only knob is a
         # contradiction — reject it like the centroid conflict below
         # rather than silently overriding what the user wrote.
@@ -1579,80 +1093,23 @@ def _semantic_dedup_node(spark, upstreams, opts):
             "SemanticDedup: scaled: false contradicts target_cell_size "
             "(a scaled-path knob) — drop one"
         )
-    scaled = opts.get("scaled", False) or "target_cell_size" in opts
-    if scaled and (opts.get("centroids") or opts.get("num_centroids")):
-        raise ValueError(
-            "SemanticDedup: scaled mode sizes its own centroid count "
-            "(k = n / target_cell_size) — drop centroids/num_centroids "
-            "or drop scaled/target_cell_size"
-        )
-    if scaled:
-        return semantic_dedup_scaled(
-            df,
-            threshold=opts.get("threshold", 0.9),
-            target_cell_size=opts.get("target_cell_size", 1024),
-            vec_col=opts.get("vec_col", "embedding"),
-            id_col=opts.get("id_col", "vec_id"),
-            fit_fraction=opts.get("fit_fraction"),
-            seed=opts.get("seed", 42),
-        )
-    cents = opts.get("centroids") or deterministic_centroids(
-        opts.get("num_centroids", 8), opts.get("dim", 64)
+    centroids = opts.pop("centroids", None)
+    num_centroids = opts.pop("num_centroids", None)
+    dim = opts.pop("dim", 64)
+    use_gemm = opts.pop("use_gemm", True)
+    if scaled or "target_cell_size" in opts:
+        if centroids or num_centroids:
+            raise ValueError(
+                "SemanticDedup: scaled mode sizes its own centroid count "
+                "(k = n / target_cell_size) — drop centroids/num_centroids "
+                "or drop scaled/target_cell_size"
+            )
+        return _bind(semantic_dedup_scaled, "SemanticDedup", spark, upstreams, opts, df)
+    cents = centroids or deterministic_centroids(
+        8 if num_centroids is None else num_centroids, dim
     )
-    fn = semantic_dedup_gemm if opts.get("use_gemm", True) else semantic_dedup
-    return fn(
-        df,
-        cents,
-        threshold=opts.get("threshold", 0.9),
-        vec_col=opts.get("vec_col", "embedding"),
-        id_col=opts.get("id_col", "vec_id"),
-    )
-
-
-@node_class("TrainingShardWriter")
-def _training_shard_writer_node(spark, upstreams, opts):
-    from metalpipe_spark.sinks.writers import write_training_shards
-
-    df = _one(upstreams, "TrainingShardWriter")
-    write_training_shards(
-        df,
-        path=opts["path"],
-        key_col=opts["key_col"],
-        num_shards=opts["num_shards"],
-        seed=opts.get("seed", 0),
-        max_records_per_file=opts.get("max_records_per_file"),
-    )
-    return df
-
-
-@node_class("ParquetWriter")
-def _parquet_writer(spark, upstreams, opts):
-    df = _one(upstreams, "ParquetWriter")
-    writer = df.write.mode(opts.get("mode", "overwrite"))
-    if "partition_by" in opts:
-        writer = writer.partitionBy(*opts["partition_by"])
-    writer.parquet(opts["path"])
-    return df
-
-
-@node_class("WETWriter")
-def _wet_writer(spark, upstreams, opts):
-    """Export (url, text) rows as spec-framed .wet.gz shards
-    (sources/warc.py:write_wet) — the interchange format every other
-    Common Crawl consumer reads."""
-    from metalpipe_spark.sources.warc import write_wet
-
-    df = _one(upstreams, "WETWriter")
-    write_wet(
-        df,
-        opts["path"],
-        url=opts.get("url", "url"),
-        text=opts.get("text", "text"),
-        date=opts.get("date", "2026-01-01T00:00:00Z"),
-        warc_version=str(opts.get("warc_version", "1.0")),
-        compression=opts.get("compression", "gzip"),
-    )
-    return df
+    fn = semantic_dedup_gemm if use_gemm else semantic_dedup
+    return _bind(fn, "SemanticDedup", spark, upstreams, opts, df, cents)
 
 
 # ---------------------------------------------------------------------------
@@ -1861,7 +1318,10 @@ def compile_pipeline(
                     ups = [
                         _rename_all(u, input_mapping) for u in ups
                     ]
-                df = NODE_CLASSES[spec.cls](spark, ups, opts)
+                try:
+                    df = NODE_CLASSES[spec.cls](spark, ups, opts)
+                except ValueError as exc:
+                    raise ValueError(f"node {name!r}: {exc}") from exc
                 if df is None:
                     raise ValueError(f"node {name!r} produced no DataFrame")
                 if post_fn:

@@ -1998,6 +1998,29 @@ def test_clear_shared_stages_is_kind_selective(spark):
     cat_dedup.clear_shared_stages()
 
 
+def test_clear_shared_stages_tolerates_only_py4j_errors(monkeypatch):
+    """A handle whose context is gone raises Py4JError on unpersist and
+    is dropped quietly; any other error is a real fault and propagates."""
+    from py4j.protocol import Py4JError
+
+    from metalpipe_spark.catalog import dedup as cat_dedup
+
+    class Handle:
+        def __init__(self, exc):
+            self.exc = exc
+
+        def unpersist(self, blocking):
+            raise self.exc
+
+    stages = {("app", "sigs"): (None, Handle(Py4JError("stopped")))}
+    monkeypatch.setattr(cat_dedup, "_SHARED_STAGES", stages)
+    cat_dedup.clear_shared_stages()
+    assert stages == {}
+    stages[("app", "cc")] = (None, Handle(ValueError("bad handle")))
+    with pytest.raises(ValueError, match="bad handle"):
+        cat_dedup.clear_shared_stages({"cc"})
+
+
 def test_connected_components_driver_path_matches_distributed(spark):
     """Adaptive small-graph path (r10): below driver_max_edges the
     components resolve by driver union-find; the assignments must be

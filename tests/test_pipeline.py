@@ -1117,3 +1117,349 @@ def test_lm_train_prune_export_score_yaml(spark, tmp_path):
     p2 = compile_pipeline(spark, config2)
     got2 = {r["doc_id"]: r["mean_logprob"] for r in p2.dataframes["ppl"].collect()}
     assert got2 == got
+
+
+# -- node classes against their operators --------------------------------------
+#
+# Every node class is built at least once through compile_pipeline; where a
+# direct operator call exists, the node's output must equal that call made
+# with the same options.
+
+_DOCS = [
+    (1, "the cat sat on the mat and the cat sat on the hat", "en", "web", 0.9),
+    (2, "the cat sat on the mat and the cat sat on the hat", "en", "web", 0.4),
+    (3, "a dog ran in the park today while the cat sat on the mat", "en", "books", 0.7),
+    (4, "le chat noir dort sur le tapis rouge", "fr", "books", 0.2),
+    (5, "der schnelle braune fuchs springt", "de", "code", 0.5),
+    (6, "a dog ran in the park today", "en", "code", 0.1),
+]
+
+
+def _docs(spark, tmp_path):
+    """(ParquetReader node spec, the same table read directly)."""
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(
+        _DOCS, "doc_id long, text string, lang string, source string, score double"
+    ).write.parquet(path)
+    return {"class": "ParquetReader", "options": {"path": path}}, spark.read.parquet(path)
+
+
+def _build(spark, nodes, path):
+    return compile_pipeline(spark, {"nodes": nodes, "paths": [path]}).dataframes[path[-1]]
+
+
+def _assert_same(got, want):
+    assert got.columns == want.columns
+    if not got.sameSemantics(want):  # the same plan needs no run
+        assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr)
+
+
+def _node_vs_operator(spark, tmp_path, cls, options, call):
+    """Build ``docs -> cls(options)`` and compare with ``call(docs)``."""
+    src, df = _docs(spark, tmp_path)
+    got = _build(spark, {"docs": src, "n": {"class": cls, "options": options}}, ["docs", "n"])
+    _assert_same(got, call(df))
+
+
+def test_operator_nodes_resolve():
+    """Every one-operator node class names an importable operator whose
+    leading parameter is the session (a source) or the upstream."""
+    import inspect
+
+    from metalpipe_spark.plans.pipeline import NODE_CLASSES, OPERATOR_NODES
+    from metalpipe_spark.udf_registry import load_function
+
+    assert len(OPERATOR_NODES) >= 25
+    for cls, path in OPERATOR_NODES.items():
+        assert cls in NODE_CLASSES
+        first = next(iter(inspect.signature(load_function(f"metalpipe_spark.{path}")).parameters))
+        assert first in ("spark", "df", "lm", "edges"), (cls, first)
+
+
+def test_csv_reader_node(spark, tmp_path):
+    from metalpipe_spark.sources.readers import csv_reader
+
+    path = tmp_path / "t.csv"
+    path.write_text("a,b\n1,x\n2,y\n")
+    opts = {"path": str(path), "header": True, "infer_schema": False}
+    got = _build(spark, {"r": {"class": "CSVReader", "options": opts}}, ["r"])
+    _assert_same(got, csv_reader(spark, **opts))
+    assert dict(got.dtypes)["a"] == "string"
+
+
+def test_local_file_reader_node(spark, tmp_path):
+    from metalpipe_spark.sources.readers import local_file_reader
+
+    path = tmp_path / "t.txt"
+    path.write_text("hello\nworld\n")
+    opts = {"path": str(path), "serialize": True}
+    got = _build(spark, {"r": {"class": "LocalFileReader", "options": opts}}, ["r"])
+    _assert_same(got, local_file_reader(spark, **opts))
+    assert got.count() == 2
+
+
+def test_warc_reader_node(spark, tmp_path):
+    import gzip
+
+    from metalpipe_spark.sources.warc import read_warc
+    from tests.test_warc import _record
+
+    http = b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n<p>hi</p>"
+    path = str(tmp_path / "f.warc.gz")
+    with gzip.open(path, "wb") as f:
+        f.write(_record("warcinfo", "", b"x: y") + _record("response", "http://a/1", http))
+    opts = {"path": path, "record_types": ["response", "warcinfo"]}
+    got = _build(spark, {"r": {"class": "WARCReader", "options": opts}}, ["r"])
+    _assert_same(got, read_warc(spark, path, record_types=("response", "warcinfo")))
+    assert got.count() == 2
+
+
+def test_wet_stream_node(spark, tmp_path):
+    import gzip
+
+    from metalpipe_spark.sources.warc import read_wet
+    from metalpipe_spark.streaming.streams import run_to_memory
+    from tests.test_warc import _record
+
+    watch = tmp_path / "crawl"
+    watch.mkdir()
+    with gzip.open(str(watch / "seg0.wet.gz"), "wb") as f:
+        f.write(_record("warcinfo", "", b"c: t") + _record("conversion", "http://s/0", b"doc"))
+    opts = {"directory": str(watch), "glob": "*.wet.gz", "max_files_per_trigger": 1}
+    stream = _build(spark, {"w": {"class": "WETStream", "options": opts}}, ["w"])
+    assert stream.isStreaming
+    _assert_same(run_to_memory(stream, "wet_stream_node", spark), read_wet(spark, str(watch)))
+
+
+def test_sequence_emitter_node(spark):
+    from metalpipe_spark.sources.emitters import sequence_emitter
+
+    opts = {"sequence": [1, 2, 3], "max_sequences": 2}
+    got = _build(spark, {"s": {"class": "SequenceEmitter", "options": opts}}, ["s"])
+    _assert_same(got, sequence_emitter(spark, **opts))
+
+
+def test_train_ngram_lm_node(spark, tmp_path):
+    from metalpipe_spark.operators.text import train_ngram_lm
+
+    opts = {"n": 2, "k": 0.5, "min_count": 2}
+    _node_vs_operator(spark, tmp_path, "TrainNgramLM", opts, lambda df: train_ngram_lm(df, **opts))
+
+
+def test_prune_lm_node(spark, tmp_path):
+    from metalpipe_spark.operators.text import prune_lm
+
+    path = str(tmp_path / "lm")
+    spark.createDataFrame(
+        [("the", 1, 6, 20, 0.3, -0.52, 0.4, -0.4), ("cat", 1, 3, 20, 0.15, -0.82, 0.5, -0.3),
+         ("sat", 1, 2, 20, 0.1, -1.0, 0.0, 0.0), ("the cat", 2, 3, 6, 0.5, -0.3, 0.0, 0.0),
+         ("cat sat", 2, 1, 3, 0.33, -0.48, 0.0, 0.0)],
+        "ngram string, order int, n_count bigint, ctx_count bigint, prob double, "
+        "logprob double, backoff double, log_backoff double",
+    ).write.parquet(path)
+    nodes = {
+        "lm": {"class": "ParquetReader", "options": {"path": path}},
+        "pruned": {"class": "PruneLM", "options": {"min_counts": 2, "n": 2}},
+    }
+    got = _build(spark, nodes, ["lm", "pruned"])
+    _assert_same(got, prune_lm(spark.read.parquet(path), min_counts=2, n=2))
+    assert "cat sat" not in {r.ngram for r in got.collect()}
+
+
+def test_corpus_report_node_renamed_keys(spark, tmp_path):
+    from metalpipe_spark.operators.text import corpus_report
+
+    opts = {"text_column": "text", "id_column": "doc_id", "lang_column": "lang",
+            "source_column": None, "exact_distinct": False}
+    _node_vs_operator(
+        spark, tmp_path, "CorpusReport", opts,
+        lambda df: corpus_report(df, text_col="text", id_col="doc_id", lang_col="lang",
+                                 source_col=None, exact_distinct=False),
+    )
+
+
+def test_bm25_topk_node_renamed_keys(spark, tmp_path):
+    from metalpipe_spark.operators.text import bm25_topk
+
+    opts = {"terms": ["cat", "dog"], "k": 2, "text_column": "text", "k1": 1.5}
+    _node_vs_operator(
+        spark, tmp_path, "BM25TopK", opts,
+        lambda df: bm25_topk(df, ["cat", "dog"], k=2, text_col="text", k1=1.5),
+    )
+
+
+def test_detect_language_model_node(spark, tmp_path):
+    from metalpipe_spark.operators.langid import detect_language_model
+
+    opts = {"text_key": "text", "output_key": "lp"}
+    _node_vs_operator(
+        spark, tmp_path, "DetectLanguageModel", opts,
+        lambda df: df.withColumn("lp", detect_language_model("text")),
+    )
+
+
+def test_exact_substr_dedup_node(spark, tmp_path):
+    from metalpipe_spark.operators.dedup import exact_substr_dedup
+
+    opts = {"min_length": 16, "hash": "xxhash64"}
+    _node_vs_operator(
+        spark, tmp_path, "ExactSubstrDedup", opts, lambda df: exact_substr_dedup(df, **opts)
+    )
+
+
+def test_incremental_exact_substr_node(spark, tmp_path):
+    from metalpipe_spark.operators.dedup import incremental_exact_substr
+
+    src, df = _docs(spark, tmp_path)
+    opts = {"min_length": 16, "store_view": "xs_store_node"}
+    got = _build(spark, {"docs": src, "xs": {"class": "IncrementalExactSubstr",
+                                             "options": opts}}, ["docs", "xs"])
+    clean, store = incremental_exact_substr(df, None, min_length=16)
+    _assert_same(got, clean)
+    _assert_same(spark.table("xs_store_node"), store)
+
+
+def test_incremental_embed_node(spark, tmp_path):
+    from metalpipe_spark.operators.inference import incremental_embed
+
+    src, df = _docs(spark, tmp_path)
+    opts = {"model": "hashed-projection:8", "output_col": "vec", "fresh_view": "emb_fresh_node"}
+    got = _build(spark, {"docs": src, "emb": {"class": "IncrementalEmbed",
+                                              "options": opts}}, ["docs", "emb"])
+    fresh, updated = incremental_embed(df, None, model="hashed-projection:8", output_col="vec")
+    _assert_same(got, updated)
+    _assert_same(spark.table("emb_fresh_node"), fresh)
+
+
+def test_curriculum_order_node(spark, tmp_path, monkeypatch):
+    import functools
+
+    import metalpipe_spark.operators.curation as curation
+
+    # curriculum_order materializes its prefix sums while it builds, so
+    # one build is checked through a pass-through spy instead of two runs.
+    real, seen = curation.curriculum_order, []
+
+    @functools.wraps(real)
+    def spy(df, **kwargs):
+        seen.append(kwargs)
+        return real(df, **kwargs)
+
+    monkeypatch.setattr(curation, "curriculum_order", spy)
+    opts = {"score_col": "score", "key_col": "doc_id", "n_buckets": 2, "seed": 3,
+            "ascending": False, "bucket_col": "band"}
+    src, _ = _docs(spark, tmp_path)
+    got = _build(spark, {"docs": src, "n": {"class": "CurriculumOrder", "options": opts}},
+                 ["docs", "n"])
+    assert seen == [opts]
+    rows = sorted(got.collect(), key=lambda r: r.train_pos)
+    assert [r.train_pos for r in rows] == list(range(len(_DOCS)))
+    assert [r.band for r in rows] == [0, 0, 0, 1, 1, 1]
+    assert rows[0].score >= rows[-1].score  # descending: best first
+
+
+def test_temperature_epochs_node(spark, tmp_path):
+    from metalpipe_spark.operators.curation import temperature_resample_epochs
+
+    opts = {"domain_col": "source", "key_col": "doc_id", "alpha": 0.5, "budget_rows": 9}
+    _node_vs_operator(
+        spark, tmp_path, "TemperatureEpochs", opts,
+        lambda df: temperature_resample_epochs(df, **opts),
+    )
+
+
+def test_global_shuffle_node(spark, tmp_path):
+    from metalpipe_spark.operators.curation import global_shuffle
+
+    opts = {"key_col": "doc_id", "seed": 7, "num_partitions": 2}
+    _node_vs_operator(
+        spark, tmp_path, "GlobalShuffle", opts, lambda df: global_shuffle(df, **opts)
+    )
+
+
+def test_parquet_writer_node(spark, tmp_path):
+    src, df = _docs(spark, tmp_path)
+    out = str(tmp_path / "out")
+    opts = {"path": out, "mode": "overwrite", "partition_by": ["lang"]}
+    got = _build(spark, {"docs": src, "w": {"class": "ParquetWriter", "options": opts}},
+                 ["docs", "w"])
+    _assert_same(got, df)  # forwards its upstream
+    _assert_same(spark.read.parquet(out).select(*df.columns), df)
+    assert {d for d in os.listdir(out) if d.startswith("lang=")} == {
+        "lang=de", "lang=en", "lang=fr"
+    }
+
+
+def test_unknown_option_raises_naming_node_and_key(spark, tmp_path):
+    """A typo'd option is an error, not a silent default."""
+    src, _ = _docs(spark, tmp_path)
+    for opts, key in (({"min_lenght": 16}, "min_lenght"), ({"_rk": 1}, "_rk")):
+        nodes = {"docs": src, "xs": {"class": "ExactSubstrDedup", "options": opts}}
+        with pytest.raises(ValueError, match=rf"node 'xs'.*ExactSubstrDedup.*{key}"):
+            compile_pipeline(spark, {"nodes": nodes, "paths": [["docs", "xs"]]})
+    nodes = {"r": {"class": "Remapper", "options": {}}, "c": {"class": "CounterOfThings"}}
+    with pytest.raises(ValueError, match="node 'r'.*mapping"):
+        compile_pipeline(spark, {"nodes": nodes, "paths": [["c", "r"]]})
+
+
+class _Stop(Exception):
+    pass
+
+
+def _spy(monkeypatch, module, name):
+    """Replace ``module.name`` with a same-signature spy that records its
+    keyword arguments and stops the build."""
+    import functools
+
+    real = getattr(module, name)
+    calls = []
+
+    @functools.wraps(real)
+    def spy(*args, **kwargs):
+        calls.append(kwargs)
+        raise _Stop
+
+    monkeypatch.setattr(module, name, spy)
+    return calls
+
+
+def test_yaml_defaults_that_differ_from_the_operator(spark, tmp_path, monkeypatch):
+    """Four YAML defaults deliberately differ from the operator they
+    wrap; changing either side changes pipeline outputs."""
+    import inspect
+
+    import metalpipe_spark.operators.dedup as dedup
+    import metalpipe_spark.operators.text as text
+    import metalpipe_spark.plans.pipeline as pipeline
+
+    def default(fn, name):
+        return inspect.signature(fn).parameters[name].default
+
+    src, _ = _docs(spark, tmp_path)
+
+    def build(cls, opts, upstreams=("docs",)):
+        nodes = {"docs": src, "other": src, "n": {"class": cls, "options": opts}}
+        edges = [[u, "n"] for u in upstreams]
+        with pytest.raises(_Stop):
+            compile_pipeline(spark, {"nodes": nodes, "edges": edges})
+
+    # NearDupDedup bands: 8 in YAML, 4 in minhash_lsh_pairs
+    assert default(dedup.minhash_lsh_pairs, "bands") == 4
+    calls = _spy(monkeypatch, dedup, "minhash_lsh_pairs")
+    build("NearDupDedup", {})
+    assert calls[-1]["bands"] == 8
+    # Join broadcast: off in YAML, broadcast_dim on in enrich_join
+    assert default(pipeline.enrich_join, "broadcast_dim") is True
+    calls = _spy(monkeypatch, pipeline, "enrich_join")
+    build("Join", {"on": "doc_id"}, upstreams=("docs", "other"))
+    assert calls[-1]["broadcast_dim"] is False
+    # TrainBackoffLM prunes at the trained n=3; prune_lm's own n is None
+    assert default(text.prune_lm, "n") is None
+    calls = _spy(monkeypatch, text, "prune_lm")
+    build("TrainBackoffLM", {"min_counts": 2})
+    assert calls[-1]["n"] == 3
+    # CSVToDictionaryList infer_schema: off in YAML, on in csv_reader
+    assert default(pipeline.csv_reader, "infer_schema") is True
+    calls = _spy(monkeypatch, pipeline, "csv_reader")
+    build("CSVToDictionaryList", {"path": str(tmp_path / "x.csv")}, upstreams=())
+    assert calls[-1]["infer_schema"] is False

@@ -100,3 +100,92 @@ def test_cited_scripts_exist():
         if not os.path.isfile(os.path.join(REPO, "scripts", name))
     }
     assert not missing, missing
+
+
+CASTS = {"bool", "float", "int", "list", "str", "tuple"}
+
+
+def _restated_defaults(repo: str) -> list[str]:
+    """``k=opts.get("k", d)`` keyword arguments in the YAML node adapters
+    (``@node_class`` functions of plans/pipeline.py) whose ``d`` equals
+    the default of the called operator's own parameter ``k`` — a second
+    copy of an option default that the node binder already reads from
+    the operator's signature.  Operators are resolved through the
+    adapters' ``from metalpipe_spark... import`` lines and read with
+    ``ast``, so the scan needs no Spark."""
+    import ast
+
+    def parse(path):
+        with open(path, encoding="utf-8") as f:
+            return ast.parse(f.read())
+
+    def value(node):
+        # Constant expressions (``1 << 18``) evaluate; a default that
+        # names something (a sentinel) equals nothing an adapter writes.
+        try:
+            return eval(compile(ast.Expression(node), "<default>", "eval"), {})
+        except NameError:
+            return object()
+
+    pipeline = os.path.join(repo, "metalpipe_spark", "plans", "pipeline.py")
+    tree = parse(pipeline)
+    imports = {
+        alias.asname or alias.name: (node.module, alias.name)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.ImportFrom) and (node.module or "").startswith("metalpipe_spark")
+        for alias in node.names
+    }
+    defaults_of: dict[tuple[str, str], dict] = {}
+
+    def operator_defaults(module: str, name: str) -> dict:
+        if (module, name) not in defaults_of:
+            path = os.path.join(repo, *module.split(".")) + ".py"
+            fn = next(
+                n for n in parse(path).body
+                if isinstance(n, ast.FunctionDef) and n.name == name
+            )
+            args = fn.args.posonlyargs + fn.args.args
+            pairs = list(zip(args[len(args) - len(fn.args.defaults):], fn.args.defaults))
+            pairs += [(a, d) for a, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults) if d]
+            defaults_of[(module, name)] = {a.arg: value(d) for a, d in pairs}
+        return defaults_of[(module, name)]
+
+    sites = []
+    adapters = [
+        fn for fn in tree.body
+        if isinstance(fn, ast.FunctionDef)
+        and any(
+            isinstance(d, ast.Call) and getattr(d.func, "id", "") == "node_class"
+            for d in fn.decorator_list
+        )
+    ]
+    assert len(adapters) > 30, "the scan must see the node adapters"
+    for fn in adapters:
+        for call in ast.walk(fn):
+            if not (isinstance(call, ast.Call) and isinstance(call.func, ast.Name)
+                    and call.func.id in imports):
+                continue
+            defaults = operator_defaults(*imports[call.func.id])
+            for kw in call.keywords:
+                v = kw.value
+                while (isinstance(v, ast.Call) and getattr(v.func, "id", "") in CASTS
+                       and len(v.args) == 1):
+                    v = v.args[0]  # int(opts.get("k", 4)) restates 4 too
+                if not (
+                    isinstance(v, ast.Call) and isinstance(v.func, ast.Attribute)
+                    and v.func.attr == "get" and getattr(v.func.value, "id", "") == "opts"
+                    and v.args and isinstance(v.args[0], ast.Constant)
+                    and v.args[0].value == kw.arg and kw.arg in defaults
+                ):
+                    continue
+                given = value(v.args[1]) if len(v.args) > 1 else None
+                if given == defaults[kw.arg]:
+                    sites.append(f"{fn.name}:{v.lineno} {call.func.id}({kw.arg}={given!r})")
+    return sites
+
+
+def test_node_adapters_do_not_restate_operator_defaults():
+    """A node option's default lives once, in its operator's signature:
+    an adapter that passes ``k=opts.get("k", <the operator's default>)``
+    keeps a second copy that can drift from the first."""
+    assert _restated_defaults(REPO) == []

@@ -970,6 +970,39 @@ def test_incremental_semantic_dedup_scaled_batches(spark):
     assert store.count() == 120  # survivors only
 
 
+def test_thread_target_wrapper_both_return_shapes(monkeypatch):
+    """inheritable_thread_target(session) returns the session itself
+    when pinned-thread mode is off (targets then run as-is) and a
+    decorator when it is on; a real failure inside it propagates."""
+    import pyspark
+
+    from metalpipe_spark.operators.similarity import _thread_target_wrapper
+
+    session = object()
+
+    def target():
+        return 1
+
+    monkeypatch.setattr(pyspark, "inheritable_thread_target", lambda s: s)
+    assert _thread_target_wrapper(session)(target) is target
+    wrapped = []
+    monkeypatch.setattr(
+        pyspark, "inheritable_thread_target",
+        lambda s: lambda fn: wrapped.append(fn) or (lambda: fn() + 1),
+    )
+    assert _thread_target_wrapper(session)(target)() == 2
+    assert wrapped == [target]
+
+    for exc in (TypeError("real bug"), AssertionError("no active SparkContext")):
+
+        def failing(s, exc=exc):
+            raise exc
+
+        monkeypatch.setattr(pyspark, "inheritable_thread_target", failing)
+        with pytest.raises(type(exc), match=str(exc)):
+            _thread_target_wrapper(session)(target)
+
+
 def test_incremental_semantic_dedup_scaled_jobs_inherit_group(spark):
     """The concurrent survivor-checkpoint jobs run from pool threads,
     which under pinned-thread mode get FRESH Spark local properties —
